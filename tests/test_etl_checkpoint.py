@@ -2,6 +2,11 @@
 
 from __future__ import annotations
 
+import json
+import os
+
+import pytest
+
 from tinyerp_etl_spark.etl.checkpoint import (
     STATUS_DONE,
     STATUS_ERROR,
@@ -55,3 +60,46 @@ def test_running_counter_accumulates(spark, tmp_path):
     assert p.registros_processados == 150  # ref :208
     assert cp.percent_complete("estoques") == 50.0  # ref :211
     assert p.status_execucao == STATUS_RUNNING
+
+
+def test_cycle_runs_no_spark_jobs(spark, tmp_path):
+    sc = spark.sparkContext
+    sc.setJobGroup("page-checkpoint", "control state runs no Spark job")
+    try:
+        cp = PageCheckpoint(spark, str(tmp_path / "store" / "cp"))
+        assert cp.start("produtos", "01/08/2026 00:00:00") == 1
+        cp.advance("produtos", 1, 2, 10)
+        cp.advance("produtos", 2, 2, 5)
+        cp.finish("produtos", STATUS_DONE)
+        assert cp.progress("produtos").registros_processados == 15
+        assert cp.percent_complete("produtos") == 100.0
+        assert list(sc.statusTracker().getJobIdsForGroup("page-checkpoint")) == []
+        spark.range(1).count()  # the probe itself sees jobs in the group
+        assert list(sc.statusTracker().getJobIdsForGroup("page-checkpoint"))
+    finally:
+        sc.setJobGroup(None, None)
+
+
+@pytest.mark.parametrize("crash", ["replace", "dump"])
+def test_failed_write_leaves_previous_progress(spark, tmp_path, monkeypatch, crash):
+    cp = PageCheckpoint(spark, str(tmp_path / "cp"))
+    cp.start("produtos", "01/08/2026 00:00:00")
+    cp.advance("produtos", 3, 10, 150)
+    before = cp.progress("produtos")
+
+    def boom(*args, **kwargs):
+        raise OSError("crash before the rename")
+
+    if crash == "replace":
+        monkeypatch.setattr(os, "replace", boom)
+    else:
+        monkeypatch.setattr(json, "dumps", boom)
+    with pytest.raises(OSError, match="before the rename"):
+        cp.advance("produtos", 4, 10, 50)
+    with pytest.raises(OSError, match="before the rename"):
+        cp.finish("produtos", STATUS_ERROR)
+    monkeypatch.undo()
+    assert cp.progress("produtos") == before
+    assert os.listdir(tmp_path) == ["cp"]  # no temp file left behind
+    # the interrupted run still resumes after the last committed page
+    assert cp.start("produtos", "01/08/2026 00:00:00") == 4

@@ -2,7 +2,10 @@
 
 from __future__ import annotations
 
+import os
 from datetime import datetime, timedelta, timezone
+
+import pytest
 
 from tinyerp_etl_spark.etl.watermark import (
     WatermarkStore,
@@ -56,6 +59,59 @@ def test_store_roundtrip_and_upsert(spark, tmp_path):
     store.commit("produtos", t2)  # upsert overwrites
     assert store.get("produtos") == t2
     assert store.get("pedidos") == t1
+
+
+def test_store_runs_no_spark_jobs(spark, tmp_path):
+    sc = spark.sparkContext
+    sc.setJobGroup("watermark-store", "control state runs no Spark job")
+    try:
+        store = WatermarkStore(spark, str(tmp_path / "wm"))
+        store.get("produtos")
+        store.commit("produtos", NOW)
+        assert store.get("produtos") == NOW
+        assert list(sc.statusTracker().getJobIdsForGroup("watermark-store")) == []
+        spark.range(1).count()  # the probe itself sees jobs in the group
+        assert list(sc.statusTracker().getJobIdsForGroup("watermark-store"))
+    finally:
+        sc.setJobGroup(None, None)
+
+
+def test_store_microseconds_roundtrip_as_utc(spark, tmp_path):
+    store = WatermarkStore(spark, str(tmp_path / "wm"))
+    ts = datetime(2026, 8, 10, 8, 0, 0, 123456, tzinfo=timezone.utc)
+    store.commit("produtos", ts)
+    # a non-UTC offset lands as the same instant in UTC
+    store.commit("pedidos", ts.astimezone(timezone(timedelta(hours=-3))))
+    for process in ("produtos", "pedidos"):
+        got = store.get(process)
+        assert got == ts
+        assert got.utcoffset() == timedelta(0)
+        assert got.microsecond == 123456
+
+
+def test_failed_commit_leaves_previous_watermarks(spark, tmp_path, monkeypatch):
+    store = WatermarkStore(spark, str(tmp_path / "wm"))
+    store.commit("produtos", NOW)
+
+    def boom(src, dst):
+        raise OSError("crash before the rename")
+
+    monkeypatch.setattr(os, "replace", boom)
+    with pytest.raises(OSError, match="before the rename"):
+        store.commit("produtos", NOW + timedelta(days=1))
+    with pytest.raises(OSError, match="before the rename"):
+        store.commit("pedidos", NOW)
+    monkeypatch.undo()
+    assert store.get("produtos") == NOW
+    assert store.get("pedidos") is None
+    assert os.listdir(tmp_path) == ["wm"]  # no temp file left behind
+
+
+def test_old_parquet_store_dir_fails_loud(spark, tmp_path):
+    # no fallback reader: a directory at the path is an error
+    (tmp_path / "wm").mkdir()
+    with pytest.raises(IsADirectoryError):
+        WatermarkStore(spark, str(tmp_path / "wm")).get("produtos")
 
 
 def test_max_business_timestamp_chronological_not_lexicographic(spark):

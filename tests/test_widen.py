@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from tinyerp_etl_spark.sources.catalog import load_table, widen_if_narrow
 
 
@@ -73,3 +75,20 @@ def test_noop_when_directory_backed_table_is_wide(spark, tmp_path):
         assert widen_if_narrow(docs, str(tmp_path)) is docs
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+
+
+@pytest.mark.parametrize("max_pb", ["128mb", "1t"])
+def test_byte_suffixed_max_partition_bytes(spark, tmp_path, max_pb):
+    # the split size goes through Spark's own byte-string parser, so
+    # every suffix Spark accepts works ("1t" once reached int() and
+    # raised); either size leaves this small dir narrow, so it widens
+    path = _write_parts_dir(spark, tmp_path, n_parts=2)
+    docs = spark.read.parquet(path)
+    old = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    try:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", max_pb)
+        out = widen_if_narrow(docs, str(tmp_path))
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+    assert out is not docs
+    assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism

@@ -12,38 +12,24 @@ and its three operations:
 - ``finish`` ≡ finalizar_progresso (ref :198): terminal status.
 
 In the Structured Streaming mirror this is exactly the checkpoint
-offset log; in batch mode it is a tiny driver-side parquet table —
-control state, not data, so single-row writes are correct here.
+offset log; in batch mode it is one local JSON document (process
+→ progress row), replaced atomically on every update — control state,
+not data, so no Spark job runs here.
 """
 
 from __future__ import annotations
 
-import os
+import json
 from dataclasses import dataclass
 from datetime import datetime, timezone
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from tinyerp_etl_spark.functions.localdf import local_df
+from tinyerp_etl_spark.etl.table_store import read_json, write_atomic
 
 STATUS_PENDING = "PENDENTE"
 STATUS_RUNNING = "EM_ANDAMENTO"
 STATUS_ERROR = "ERRO"
 STATUS_DONE = "CONCLUIDO"
-
-_SCHEMA = T.StructType(
-    [
-        T.StructField("processo", T.StringType(), False),
-        T.StructField("data_filtro_api", T.StringType()),
-        T.StructField("pagina_atual", T.IntegerType()),
-        T.StructField("total_paginas", T.IntegerType()),
-        T.StructField("registros_processados", T.LongType()),
-        T.StructField("timestamp_inicio", T.TimestampType()),
-        T.StructField("timestamp_ultima_pagina", T.TimestampType()),
-        T.StructField("status_execucao", T.StringType()),
-    ]
-)
 
 
 @dataclass
@@ -57,50 +43,37 @@ class Progress:
 
 
 class PageCheckpoint:
-    """Parquet-backed page progress store (one row per process)."""
+    """JSON-backed page progress store (one row per process).
+
+    The store never touches Spark: ``spark`` is accepted for the callers'
+    uniform ``(spark, path)`` construction and not used.
+    """
 
     def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
         self.path = path
 
     # -- storage ------------------------------------------------------
 
-    def _read_all(self):
-        if not os.path.exists(self.path):
-            return []
-        return self.spark.read.schema(_SCHEMA).parquet(self.path).collect()
+    def _load(self) -> dict[str, dict]:
+        return read_json(self.path) or {}
 
-    def _get_row(self, process: str):
-        for r in self._read_all():
-            if r["processo"] == process:
-                return r
-        return None
-
-    def _upsert(self, process: str, **fields) -> None:
-        now = datetime.now(timezone.utc).replace(tzinfo=None)
-        rows = {r["processo"]: r.asDict() for r in self._read_all()}
-        cur = rows.get(
+    def _upsert(self, rows: dict[str, dict], process: str, **fields) -> None:
+        """Update ``process``'s row in ``rows`` (as just loaded) and
+        replace the file with the result."""
+        now = datetime.now(timezone.utc).isoformat()
+        cur = rows.setdefault(
             process,
             {
-                "processo": process,
                 "data_filtro_api": None,
                 "pagina_atual": 0,
                 "total_paginas": 0,
                 "registros_processados": 0,
                 "timestamp_inicio": now,
-                "timestamp_ultima_pagina": now,
                 "status_execucao": STATUS_PENDING,
             },
         )
-        cur.update(fields)
-        cur["timestamp_ultima_pagina"] = now
-        rows[process] = cur
-        df = local_df(
-            self.spark,
-            [tuple(r[f.name] for f in _SCHEMA.fields) for r in rows.values()],
-            _SCHEMA,
-        )
-        df.coalesce(1).write.mode("overwrite").parquet(self.path)
+        cur.update(fields, timestamp_ultima_pagina=now)
+        write_atomic(self.path, json.dumps(rows, sort_keys=True))
 
     # -- reference-contract operations --------------------------------
 
@@ -110,31 +83,35 @@ class PageCheckpoint:
         Returns the page to start from: ``saved + 1`` when resuming an
         interrupted run with the same filter date, else 1.
         """
-        prev = self._get_row(process)
+        rows = self._load()
+        prev = rows.get(process)
         if (
             prev is not None
             and prev["data_filtro_api"] == filter_date
             and prev["status_execucao"] in (STATUS_RUNNING, STATUS_ERROR)
         ):
-            start_page = int(prev["pagina_atual"]) + 1
-            self._upsert(process, status_execucao=STATUS_RUNNING)
+            start_page = prev["pagina_atual"] + 1
+            self._upsert(rows, process, status_execucao=STATUS_RUNNING)
             return start_page
         self._upsert(
+            rows,
             process,
             data_filtro_api=filter_date,
             pagina_atual=0,
             total_paginas=0,
             registros_processados=0,
-            timestamp_inicio=datetime.now(timezone.utc).replace(tzinfo=None),
+            timestamp_inicio=datetime.now(timezone.utc).isoformat(),
             status_execucao=STATUS_RUNNING,
         )
         return 1
 
     def advance(self, process: str, page: int, total_pages: int, n_records: int) -> None:
         """Commit one page (ref :205-215): running-counter accumulation."""
-        prev = self._get_row(process)
+        rows = self._load()
+        prev = rows.get(process)
         done = (prev["registros_processados"] if prev else 0) + n_records
         self._upsert(
+            rows,
             process,
             pagina_atual=page,
             total_paginas=total_pages,
@@ -144,14 +121,14 @@ class PageCheckpoint:
 
     def finish(self, process: str, status: str) -> None:
         """Terminal status: CONCLUIDO / ERRO / EM_ANDAMENTO (page cap)."""
-        self._upsert(process, status_execucao=status)
+        self._upsert(self._load(), process, status_execucao=status)
 
     def progress(self, process: str) -> Progress | None:
-        r = self._get_row(process)
+        r = self._load().get(process)
         if r is None:
             return None
         return Progress(
-            processo=r["processo"],
+            processo=process,
             data_filtro_api=r["data_filtro_api"],
             pagina_atual=r["pagina_atual"],
             total_paginas=r["total_paginas"],

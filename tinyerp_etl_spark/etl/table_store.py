@@ -27,6 +27,37 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructField, StructType, _parse_datatype_string
 
 
+def write_atomic(path: str, text: str) -> None:
+    """Replace the file at ``path`` with ``text``, all or nothing.
+
+    Writes a temp file in the same directory, fsyncs it, then renames
+    it onto ``path`` (atomic on POSIX): a reader sees the old content
+    or the new, never a torn write, and a crash before the rename
+    leaves the old file in place. Creates the parent directory.
+    """
+    parent = os.path.dirname(path) or "."
+    os.makedirs(parent, exist_ok=True)
+    fd, tmp = tempfile.mkstemp(dir=parent, prefix=f".{os.path.basename(path)}.")
+    try:
+        with os.fdopen(fd, "w") as f:
+            f.write(text)
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(tmp, path)
+    except BaseException:
+        os.unlink(tmp)
+        raise
+
+
+def read_json(path: str):
+    """The JSON document at ``path``, or None when there is none."""
+    try:
+        with open(path) as f:
+            return json.load(f)
+    except FileNotFoundError:
+        return None
+
+
 class ConcurrentWriteError(RuntimeError):
     """Another writer committed between this writer's read and commit.
 
@@ -75,17 +106,11 @@ class TableStore:
         reader/writer instance sees the table's current shape — the
         catalog role the reference delegates to PostgreSQL's DDL.
         """
-        try:
-            with open(self._schema_file) as f:
-                return StructType.fromJson(json.load(f))
-        except FileNotFoundError:
-            return None
+        doc = read_json(self._schema_file)
+        return None if doc is None else StructType.fromJson(doc)
 
     def _save_schema(self) -> None:
-        fd, tmp = tempfile.mkstemp(dir=self.path, prefix="._SCHEMA.")
-        with os.fdopen(fd, "w") as f:
-            json.dump(self.schema.jsonValue(), f)
-        os.replace(tmp, self._schema_file)
+        write_atomic(self._schema_file, json.dumps(self.schema.jsonValue()))
 
     def add_column(self, name: str, dtype: str) -> bool:
         """ALTER TABLE ADD COLUMN IF NOT EXISTS — idempotent widening.
@@ -299,11 +324,7 @@ class TableStore:
                         "recompute and retry"
                     ) from None
                 v += 1  # legacy path: take the next free version
-        # atomic pointer swap: write-temp + rename is atomic on POSIX
-        fd, tmp = tempfile.mkstemp(dir=self.path, prefix="._CURRENT.")
-        with os.fdopen(fd, "w") as f:
-            f.write(str(v))
-        os.replace(tmp, self._pointer)
+        write_atomic(self._pointer, str(v))
         return v
 
     def commit_append(

@@ -17,8 +17,10 @@ chain (ref tiny_api_v2_cliente.py:160-181) and the watermark store
 
 Watermarks are per-process scalars — control state, not data — so the
 resolution logic is driver-side Python on purpose; only the synthetic
-bootstrap's MAX runs distributed. The store is a tiny parquet table;
-commit semantics mirror the reference: the committed timestamp is the
+bootstrap's MAX runs distributed. The store is one JSON document
+(process → ISO-8601 UTC timestamp), replaced atomically on every
+commit, so reading or committing a watermark runs no Spark job. Commit
+semantics mirror the reference: the committed timestamp is the
 *step start time* (ref :326, :363) so in-flight changes are re-read
 next run — at-least-once, made exactly-once-effective by the
 idempotent MERGE sink (etl.merge).
@@ -26,57 +28,35 @@ idempotent MERGE sink (etl.merge).
 
 from __future__ import annotations
 
-import os
+import json
 from datetime import datetime, timedelta, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from tinyerp_etl_spark.functions.localdf import local_df
+from tinyerp_etl_spark.etl.table_store import read_json, write_atomic
 
 SAFETY_DAYS_DEFAULT = 60  # DIAS_JANELA_SEGURANCA (ref :49)
 
-_STORE_SCHEMA = T.StructType(
-    [
-        T.StructField("nome_processo", T.StringType(), False),
-        T.StructField("timestamp_ultima_execucao", T.TimestampType(), False),
-    ]
-)
-
 
 class WatermarkStore:
-    """Per-process watermark table backed by parquet (ref table :90)."""
+    """Per-process watermarks in one JSON file (ref table :90).
+
+    The store never touches Spark: ``spark`` is accepted for the callers'
+    uniform ``(spark, path)`` construction and not used.
+    """
 
     def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
         self.path = path
 
-    def _read(self) -> DataFrame:
-        if not os.path.exists(self.path):
-            return self.spark.createDataFrame([], _STORE_SCHEMA)
-        return self.spark.read.schema(_STORE_SCHEMA).parquet(self.path)
-
     def get(self, process: str) -> datetime | None:
-        rows = self._read().filter(F.col("nome_processo") == process).collect()
-        if not rows:
-            return None
-        ts = rows[0]["timestamp_ultima_execucao"]
-        return ts.replace(tzinfo=timezone.utc) if ts.tzinfo is None else ts
+        ts = (read_json(self.path) or {}).get(process)
+        return None if ts is None else datetime.fromisoformat(ts)
 
     def commit(self, process: str, ts: datetime) -> None:
         """Upsert (process, ts) — the ON CONFLICT DO UPDATE at ref :122-123."""
-        ts = ts.astimezone(timezone.utc).replace(tzinfo=None)
-        # control table is per-process scalars: materialize on the
-        # driver before overwriting the path we just read from
-        rows = {
-            r["nome_processo"]: r["timestamp_ultima_execucao"]
-            for r in self._read().collect()
-        }
-        rows[process] = ts
-        merged = local_df(
-            self.spark, sorted(rows.items()), _STORE_SCHEMA
-        )
-        merged.coalesce(1).write.mode("overwrite").parquet(self.path)
+        rows = read_json(self.path) or {}
+        rows[process] = ts.astimezone(timezone.utc).isoformat()
+        write_atomic(self.path, json.dumps(rows, sort_keys=True))
 
 
 def resolve_filter_timestamp(
