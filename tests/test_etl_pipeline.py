@@ -7,10 +7,12 @@ system and a page source that serves it in date-filtered pages.
 
 from __future__ import annotations
 
+import json
 from datetime import datetime, timedelta, timezone
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from tinyerp_etl_spark.etl.checkpoint import (
     STATUS_DONE,
@@ -22,6 +24,7 @@ from tinyerp_etl_spark.etl.pipeline import EntitySync, run_entity_sync, run_pipe
 from tinyerp_etl_spark.etl.table_store import TableStore
 from tinyerp_etl_spark.etl.watermark import WatermarkStore
 from tinyerp_etl_spark.sources.catalog import TABLES, load_table
+from tinyerp_etl_spark.sources.json_pages import NO_RECORDS_ERROR, read_envelope_pages
 
 NOW = datetime(2024, 1, 31, 8, 0, 0, tzinfo=timezone.utc)
 PAGE_SIZE = 500
@@ -160,6 +163,115 @@ def run_full_expected(spark, sf_dir):
         .filter(F.col("ts") > F.lit((NOW - timedelta(days=60)).replace(tzinfo=None)))
         .count()
     )
+
+
+KV = StructType([StructField(c, LongType()) for c in ("k", "v", "ver")])
+DEDUP = pytest.mark.parametrize("keep_latest", [True, False], ids=["keep_latest", "drop_duplicates"])
+
+
+def _envelope_page(spark, tmp_path, records):
+    """One Tiny-API page file read back through the envelope reader; no
+    records is the "Nenhum registro encontrado" page (ref :281-282)."""
+    d = tmp_path / "page"
+    d.mkdir()
+    if records:
+        ret = {"status": "OK", "pagina": 1, "numero_paginas": 1,
+               "kvs": [{"kv": dict(zip(KV.fieldNames(), r))} for r in records]}
+    else:
+        ret = {"status": "Erro", "erros": [{"erro": NO_RECORDS_ERROR}]}
+    (d / "p1.json").write_text(json.dumps({"retorno": ret}))
+    return read_envelope_pages(spark, str(d), "kvs", "kv", KV)
+
+
+def _sync_one_page(spark, tmp_path, store, page_df, keep_latest):
+    cfg = EntitySync(
+        name="kv", source=lambda _ts, _page: (page_df, 1), store=store,
+        keys=["k"], order_by=[F.col("ver").desc()] if keep_latest else None,
+    )
+    wm = WatermarkStore(spark, str(tmp_path / "wm"))
+    cp = PageCheckpoint(spark, str(tmp_path / "cp"))
+    return run_entity_sync(spark, cfg, wm, cp, now=NOW)
+
+
+def _kv_rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+EXISTING = [(1, 10, 1), (5, 50, 1)]
+
+
+@DEDUP
+@pytest.mark.parametrize("page", ["static_empty", "no_records_page"])
+def test_empty_page_is_done_with_zero_records(spark, tmp_path, keep_latest, page):
+    """An empty page's observed node is optimized away (statically, or
+    by AQE once the page scan comes back empty): no metrics row, 0 rows."""
+    store = TableStore(spark, str(tmp_path / "kv"), KV)
+    store.commit(spark.createDataFrame(EXISTING, KV))
+    if page == "static_empty":
+        page_df = spark.createDataFrame([], KV)
+    else:
+        page_df = _envelope_page(spark, tmp_path, [])
+    res = _sync_one_page(spark, tmp_path, store, page_df, keep_latest)
+    assert (res.status, res.error) == (STATUS_DONE, None)
+    assert res.records == page_df.count() == 0
+    assert _kv_rows(store.read()) == EXISTING
+
+
+@DEDUP
+@pytest.mark.parametrize("bootstrapped", [True, False], ids=["into_version", "first_page"])
+def test_page_records_count_rows_before_dedup(spark, tmp_path, keep_latest, bootstrapped):
+    """``records`` counts the page's rows, duplicate keys included, also
+    for the first page into a store with no version (pedido_itens)."""
+    store = TableStore(spark, str(tmp_path / "kv"), KV)
+    if bootstrapped:
+        store.commit(spark.createDataFrame(EXISTING, KV))
+    page = [(1, 11, 2), (1, 12, 3), (2, 20, 1), (3, 30, 1), (3, 31, 2)]
+    page_df = _envelope_page(spark, tmp_path, page)
+    res = _sync_one_page(spark, tmp_path, store, page_df, keep_latest)
+    assert (res.status, res.error) == (STATUS_DONE, None)
+    assert res.records == page_df.count() == 5
+    got = _kv_rows(store.read())
+    kept = [(5, 50, 1)] if bootstrapped else []
+    if keep_latest:
+        assert got == sorted(kept + [(1, 12, 3), (2, 20, 1), (3, 31, 2)])
+    else:  # dropDuplicates keeps some row per key
+        assert [r[0] for r in got] == sorted([r[0] for r in kept] + [1, 2, 3])
+        assert set(got) <= set(kept + page)
+
+
+def test_one_page_sync_runs_jobs_only_in_source_and_commit(spark, tmp_path):
+    """The page is counted in-band by the commit's write: outside the
+    source and TableStore.commit, a sync step starts no Spark job."""
+    sc = spark.sparkContext
+    store = TableStore(spark, str(tmp_path / "kv"), KV)
+    store.commit(spark.createDataFrame(EXISTING, KV))
+    page = [(1, 11, 2), (2, 20, 1), (2, 21, 2)]
+    commit = store.commit
+
+    def in_io_group(fn):
+        def run(*args, **kwargs):
+            sc.setJobGroup("sync-io", "source and commit")
+            try:
+                return fn(*args, **kwargs)
+            finally:
+                sc.setJobGroup("sync-step", "the rest of the step")
+        return run
+
+    store.commit = in_io_group(commit)
+    source = in_io_group(lambda _ts, _page: (_envelope_page(spark, tmp_path, page), 1))
+    cfg = EntitySync(name="kv", source=source, store=store, keys=["k"],
+                     order_by=[F.col("ver").desc()])
+    wm = WatermarkStore(spark, str(tmp_path / "wm"))
+    cp = PageCheckpoint(spark, str(tmp_path / "cp"))
+    sc.setJobGroup("sync-step", "the rest of the step")
+    try:
+        res = run_entity_sync(spark, cfg, wm, cp, now=NOW)
+        assert (res.status, res.records) == (STATUS_DONE, 3)
+        assert list(sc.statusTracker().getJobIdsForGroup("sync-step")) == []
+        assert list(sc.statusTracker().getJobIdsForGroup("sync-io"))
+    finally:
+        sc.setJobGroup(None, None)
+    assert _kv_rows(store.read()) == [(1, 11, 2), (2, 21, 2), (5, 50, 1)]
 
 
 def test_pipeline_steps_fail_independently(spark, sf_dir, stores, tmp_path):

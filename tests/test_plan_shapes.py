@@ -23,6 +23,23 @@ def plan_of(df, mode: str = "formatted") -> str:
     )
 
 
+def subtree(plan: str, node: str) -> list[str]:
+    """The lines of the first ``node`` in a simple-mode plan tree and of
+    every operator below it."""
+    lines = plan.splitlines()
+    for i, line in enumerate(lines):
+        col = line.find(node)
+        if col < 0 or line[:col].strip(" :+-"):
+            continue
+        out = [line]
+        for below in lines[i + 1 :]:
+            if len(below) - len(below.lstrip(" :+-")) <= col:
+                break
+            out.append(below)
+        return out
+    raise AssertionError(f"no {node} in plan:\n{plan}")
+
+
 def test_q1_pushes_shipdate_filter_to_scan(spark, sf_dir):
     plan = plan_of(QUERIES["q1_pricing_summary"](spark, sf_dir))
     assert "PushedFilters" in plan
@@ -544,3 +561,28 @@ def test_ivf_list_partitioned_store_prunes(spark, sf_dir, tmp_path):
     # and the probe really is the one list
     lists = {r["list_id"] for r in df.select("list_id").distinct().collect()}
     assert lists <= {3}
+
+
+def test_merge_upsert_broadcasts_raw_page_keys(spark, tmp_path):
+    """The MERGE's anti-join takes its keys straight from the page scan:
+    the broadcast side holds no window and no shuffle, and the plan's one
+    shuffle is the page's keep-latest dedup."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    from tinyerp_etl_spark.etl.merge import merge_upsert
+
+    spark.range(1000).selectExpr("id AS k", "id AS v", "0L AS ver").write.parquet(
+        str(tmp_path / "existing")
+    )
+    spark.range(0, 2000, 7).selectExpr("id AS k", "id + 1 AS v", "1L AS ver").write.json(
+        str(tmp_path / "page")
+    )
+    existing = spark.read.parquet(str(tmp_path / "existing"))
+    page = spark.read.schema("k long, v long, ver long").json(str(tmp_path / "page"))
+    plan = plan_of(merge_upsert(existing, page, ["k"], [F.col("ver").desc()]), "simple")
+    below = subtree(plan, "BroadcastExchange")[1:]
+    assert not [line for line in below if re.search("Window|Exchange", line)], plan
+    assert any("FileScan json" in line for line in below), plan
+    assert len(re.findall(r"^[ :+-]*Exchange hashpartitioning", plan, re.M)) == 1, plan

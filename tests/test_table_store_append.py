@@ -162,3 +162,24 @@ def test_append_sequence_law(spark, tmp_path):
     assert st.data_file_count() == 1
     want_all = base + list(itertools.chain.from_iterable(batches))
     assert _rows(st.read()) == sorted(want_all)
+
+
+@pytest.mark.parametrize("method", ["commit", "commit_append"])
+def test_failed_write_leaves_no_staging_dir(spark, tmp_path, method):
+    """A write that fails at execution raises, keeps the current version
+    and removes its private staging dir."""
+    from pyspark.sql import functions as F
+
+    st = _store(spark, tmp_path)
+    st.commit(local_df(spark, [(1, "a")], SCHEMA))
+    failing = spark.range(4).select(
+        F.when(F.col("id") == 2, F.raise_error(F.lit("page write failed")))
+        .otherwise(F.col("id"))
+        .alias("k"),
+        F.col("id").cast("string").alias("v"),
+    )
+    with pytest.raises(Exception, match="page write failed"):
+        getattr(st, method)(failing)
+    assert st.current_version() == 1
+    assert not [d for d in os.listdir(st.path) if d.startswith(".staging-")]
+    assert _rows(st.read()) == [(1, "a")]

@@ -8,11 +8,14 @@ owned here: dedupe-keep-latest inside the increment, then an anti-join
 MERGE against the existing table.
 
 Scale notes:
-- ``merge_upsert`` shuffles both sides on the key — unavoidable for a
-  keyed merge; at 100 TB the existing table should be bucketed by the
-  key so only the (small) increment shuffles.
-- ``keep_latest`` is a single window over the key — map-side it's one
-  shuffle on the same key the merge needs, so AQE reuses the exchange.
+- ``merge_upsert`` takes the anti-join's key side from the raw
+  increment: deduplication keeps the set of keys, so the small side is
+  broadcast straight from the page scan and the existing table is
+  streamed past it unshuffled. The MERGE's one shuffle is the
+  increment's dedup (``keep_latest``'s window or ``dropDuplicates``).
+  An increment too large to broadcast turns the anti-join into a
+  shuffle join on the key; at 100 TB the existing table should then be
+  bucketed by the key so only the increment shuffles.
 - FK audits are semi/anti joins: broadcast when the parent is a dim.
 """
 
@@ -59,12 +62,16 @@ def merge_upsert(
     applied row-by-row (ref tiny_api_v2_cliente.py:122-123), expressed
     as: (existing ∖ incoming-keys) ∪ dedup(incoming). Idempotent:
     applying the same increment twice yields the same table.
+
+    The anti-join reads the keys of the raw ``incoming``: the dedup
+    keeps every key, so the key set is the same, and the key side need
+    not repeat the dedup's shuffle.
     """
+    survivors = existing.join(incoming.select(*keys), list(keys), "left_anti")
     if order_by is not None:
         incoming = keep_latest(incoming, keys, order_by)
     else:
         incoming = incoming.dropDuplicates(list(keys))
-    survivors = existing.join(incoming.select(*keys), list(keys), "left_anti")
     return survivors.unionByName(incoming)
 
 

@@ -25,7 +25,8 @@ from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from tinyerp_etl_spark.etl.checkpoint import (
     STATUS_DONE,
@@ -68,12 +69,33 @@ class EntitySync:
 
 @dataclass
 class SyncResult:
+    """``records``: rows of the transformed pages before the MERGE's
+    in-page dedup, counted in-band by the commit's own write."""
+
     name: str
     status: str
     pages: int
     records: int
     filter_ts: datetime | None = None
     error: str | None = None
+
+
+def _observed_rows(rows: Observation) -> int:
+    """The page row count observed during the commit's write.
+
+    No metrics row means 0 rows: the observed page feeds the union
+    branch of the MERGE (and its anti-join keys), and Spark's optimizer,
+    or AQE at run time, removes that branch, observed node included,
+    only once it is proven empty. ``Observation.get`` cannot return a
+    missing row, so its emptiness is read from the JVM side. A row of
+    any other shape is a fault and raises.
+    """
+    if rows._jo.getRow().length() == 0:
+        return 0
+    got = rows.get
+    if set(got) != {"n"}:
+        raise RuntimeError(f"page row count observed as {got!r}")
+    return got["n"]
 
 
 def run_entity_sync(
@@ -108,11 +130,15 @@ def run_entity_sync(
                 page_df = cfg.transform(page_df)
             n = 0
             if page_df is not None:
+                rows = Observation()
+                page_df = page_df.observe(rows, F.count(F.lit(1)).alias("n"))
                 merged = merge_upsert(
                     cfg.store.read(), page_df, cfg.keys, cfg.order_by
                 )
+                # the commit's write is the first action on ``merged``:
+                # the only one an Observation reports
                 cfg.store.commit(merged)
-                n = page_df.count()
+                n = _observed_rows(rows)
             checkpoints.advance(cfg.name, page, total_pages, n)
             pages_done += 1
             records += n

@@ -270,7 +270,13 @@ class TableStore:
         writer = data.write.mode("overwrite")
         if self.partition_by:
             writer = writer.partitionBy(*self.partition_by)
-        writer.parquet(staging)
+        try:
+            writer.parquet(staging)
+        except BaseException:
+            # versions() and vacuum() skip dot-dirs: a failed write's
+            # partial output would otherwise stay on disk for good
+            shutil.rmtree(staging, ignore_errors=True)
+            raise
         return staging
 
     def _claim_version(self, staging: str, expected_version: int | None) -> int:
