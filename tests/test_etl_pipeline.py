@@ -8,6 +8,7 @@ system and a page source that serves it in date-filtered pages.
 from __future__ import annotations
 
 import json
+import os
 from datetime import datetime, timedelta, timezone
 
 import pytest
@@ -272,6 +273,35 @@ def test_one_page_sync_runs_jobs_only_in_source_and_commit(spark, tmp_path):
     finally:
         sc.setJobGroup(None, None)
     assert _kv_rows(store.read()) == [(1, 11, 2), (2, 21, 2), (5, 50, 1)]
+
+
+@DEDUP
+def test_bad_page_in_a_sync_step_changes_no_stored_state(spark, tmp_path, keep_latest):
+    """A good page next to an error page: the MERGE's commit is the first
+    action on the page, so its protocol check fails the step before
+    anything is stored."""
+    store = TableStore(spark, str(tmp_path / "kv"), KV)
+    store.commit(spark.createDataFrame(EXISTING, KV))
+    d = tmp_path / "pages"
+    d.mkdir()
+    good = {"status": "OK", "kvs": [{"kv": {"k": 1, "v": 11, "ver": 2}}]}
+    bad = {"status": "Erro", "codigo_erro": "32", "erros": [{"erro": "Parametro invalido"}]}
+    for name, ret in (("p1.json", good), ("p2.json", bad)):
+        (d / name).write_text(json.dumps({"retorno": ret}))
+    cfg = EntitySync(
+        name="kv", source=lambda _ts, _page: (read_envelope_pages(spark, str(d), "kvs", "kv", KV), 1),
+        store=store, keys=["k"], order_by=[F.col("ver").desc()] if keep_latest else None,
+    )
+    wm = WatermarkStore(spark, str(tmp_path / "wm"))
+    cp = PageCheckpoint(spark, str(tmp_path / "cp"))
+    res = run_entity_sync(spark, cfg, wm, cp, now=NOW)
+    assert res.status == STATUS_ERROR
+    assert "status=Erro" in res.error and "codigo_erro=32" in res.error
+    assert store.current_version() == 1
+    assert not [p for p in os.listdir(tmp_path / "kv") if p.startswith(".staging-")]
+    assert cp.progress("kv").pagina_atual == 0
+    assert wm.get("kv") is None
+    assert _kv_rows(store.read()) == EXISTING
 
 
 def test_pipeline_steps_fail_independently(spark, sf_dir, stores, tmp_path):

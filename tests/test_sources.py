@@ -15,7 +15,6 @@ from tinyerp_etl_spark.sources.fetcher import (
     mask_token,
 )
 from tinyerp_etl_spark.sources.json_pages import (
-    ApiProtocolError,
     flatten_order_items,
     read_envelope_pages,
 )
@@ -86,21 +85,133 @@ def test_empty_success_page_contributes_zero_rows(spark, tmp_path):
     assert df.count() == 0
 
 
-def test_protocol_error_raises_in_strict_mode(spark, tmp_path):
+ERROR_32 = {
+    "retorno": {
+        "status": "Erro",
+        "codigo_erro": "32",
+        "erros": [{"erro": "Parametro invalido"}],
+    }
+}
+
+
+def _pedido_pages(d):
+    """A good pedidos page with nested items next to a codigo_erro=32 page."""
+    d.mkdir()
+    item = {"item": {"codigo": "A", "quantidade": "2"}}
+    _write_page(d / "p1.json", {"retorno": {"status": "OK", "status_processamento": "3",
+                                            "pedidos": [{"pedido": {"id": 7, "itens": [item]}}]}})
+    _write_page(d / "p2.json", ERROR_32)
+
+
+PEDIDO_DDL = "id long, itens array<struct<item: struct<codigo: string, quantidade: string>>>"
+
+
+@pytest.mark.parametrize(
+    "transform",
+    [
+        lambda df: df,
+        lambda df: df.drop("itens"),
+        lambda df: flatten_order_items(df, "id", "itens", "item"),
+    ],
+    ids=["page", "pedidos_drop_itens", "flatten_order_items"],
+)
+def test_error_page_fails_first_action_with_no_job_of_its_own(spark, tmp_path, transform):
+    """The protocol check is the filter above the page scan: building the
+    DataFrame runs no Spark job, and the first action raises, whatever
+    columns the transform keeps."""
+    d = tmp_path / "pages"
+    _pedido_pages(d)
+    schema = T.StructType.fromDDL(PEDIDO_DDL)
+    sc = spark.sparkContext
+    sc.setJobGroup("build-page-df", "read_envelope_pages + transform")
+    try:
+        df = transform(read_envelope_pages(spark, str(d), "pedidos", "pedido", schema))
+        assert list(sc.statusTracker().getJobIdsForGroup("build-page-df")) == []
+    finally:
+        sc.setJobGroup(None, None)
+    with pytest.raises(Exception, match="codigo_erro=32"):
+        df.collect()
+
+
+GOOD_PAGE = json.dumps({"retorno": {"status": "OK", "produtos": [{"produto": {"id": 1}}]}})
+ID_LONG = T.StructType([T.StructField("id", T.LongType())])
+
+
+@pytest.mark.parametrize(
+    "bad",
+    [
+        GOOD_PAGE[:-7],
+        json.dumps(json.loads(GOOD_PAGE), indent=2),
+        GOOD_PAGE.replace('"id": 1', '"id": "x1"'),
+    ],
+    ids=["truncated", "multi_line", "x1_under_long"],
+)
+def test_malformed_page_file_fails_the_read(spark, tmp_path, bad):
+    """FAILFAST: a page file Spark cannot parse under the envelope schema
+    fails the read instead of vanishing or turning into nulls."""
     d = tmp_path / "pages"
     d.mkdir()
-    _write_page(
-        d / "bad.json",
-        {
-            "retorno": {
-                "status": "Erro",
-                "codigo_erro": "32",
-                "erros": [{"erro": "Parametro invalido"}],
-            }
-        },
+    (d / "p1.json").write_text(GOOD_PAGE)
+    (d / "p2.json").write_text(bad)
+    df = read_envelope_pages(spark, str(d), "produtos", "produto", ID_LONG)
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+        df.collect()
+
+
+def _status_page(status_processamento):
+    return {"retorno": {"status": "OK", "status_processamento": status_processamento,
+                        "produtos": [{"produto": {"id": "1", "nome": "a", "preco": "1"}}]}}
+
+
+#: envelope -> outcome every reader must agree on: records read, or a fault
+VERDICTS = {
+    "processing_3": (_status_page("3"), 1),
+    "processing_10": (_status_page("10"), 1),
+    "processing_null": (_status_page(None), 1),
+    "processing_1": (_status_page("1"), "raise"),
+    "processing_2": (_status_page("2"), "raise"),
+    "no_records": ({"retorno": {"status": "Erro",
+                                "erros": [{"erro": "Nenhum registro encontrado"}]}}, 0),
+    "codigo_erro_32": (ERROR_32, "raise"),
+    "empty_erros": ({"retorno": {"status": "Erro", "erros": []}}, "raise"),
+    "no_status": ({"retorno": {"produtos": [{"produto": {"id": "1"}}]}}, "raise"),
+}
+
+
+def _outcome(read):
+    try:
+        return read()
+    except Exception as exc:
+        if "page breaks the status protocol" not in str(exc):
+            raise
+        return "raise"
+
+
+@pytest.mark.parametrize("case", list(VERDICTS))
+def test_all_page_readers_give_the_same_verdict(spark, tmp_path, case):
+    """read_envelope_pages, the tiny_pages DataSource and fetch_page
+    apply one status rule: same records, same empty page, same faults."""
+    envelope, expected = VERDICTS[case]
+    d = tmp_path / "pages"
+    d.mkdir()
+    _write_page(d / "page_0001.json", envelope)
+    _register_tiny_pages(spark)
+    source = (
+        spark.read.format("tiny_pages")
+        .schema(PRODUTO_SCHEMA)
+        .option("path", str(d))
+        .option("record_field", "produtos")
+        .option("wrapper", "produto")
     )
-    with pytest.raises(ApiProtocolError, match="codigo_erro=32"):
-        read_envelope_pages(spark, str(d), "produtos", "produto", PRODUTO_SCHEMA)
+    got = {
+        "read_envelope_pages": _outcome(lambda: len(read_envelope_pages(
+            spark, str(d), "produtos", "produto", PRODUTO_SCHEMA).collect())),
+        "tiny_pages": _outcome(lambda: len(source.load().collect())),
+        "fetch_page": _outcome(lambda: len(fetch_page(
+            _transport_seq([(200, envelope)]), "u", {}, sleep=_no_sleep
+        ).retorno.get("produtos") or [])),
+    }
+    assert got == dict.fromkeys(got, expected)
 
 
 def test_flatten_order_items(spark):
@@ -335,6 +446,23 @@ def test_tiny_pages_batch_protocol_error(spark, tmp_path):
         .load()
     )
     with pytest.raises(Exception, match="Token invalido"):
+        df.collect()
+
+
+def test_tiny_pages_value_that_does_not_coerce_fails(spark, tmp_path):
+    d = tmp_path / "pages"
+    d.mkdir()
+    _write_page(d / "page_0001.json", json.loads(GOOD_PAGE.replace('"id": 1', '"id": "x1"')))
+    _register_tiny_pages(spark)
+    df = (
+        spark.read.format("tiny_pages")
+        .schema("id long")
+        .option("path", str(d))
+        .option("record_field", "produtos")
+        .option("wrapper", "produto")
+        .load()
+    )
+    with pytest.raises(Exception, match="x1"):
         df.collect()
 
 

@@ -10,6 +10,7 @@ reader (sources.json_pages):
 - other 4xx → hard fail (ref :291),
 - API error code 35 → forced retry (ref :268-270),
 - API error code 2 → critical token failure, no retry (ref :272),
+- any other status-protocol fault (``json_pages.page_fault``) → hard fail,
 - network/timeout errors retried up to the budget (ref :292-295),
 - inter-page pacing (ref sleep(1) :367) owned by the caller loop.
 
@@ -23,6 +24,8 @@ from __future__ import annotations
 import time
 from collections.abc import Callable
 from dataclasses import dataclass
+
+from tinyerp_etl_spark.sources.json_pages import page_fault
 
 DEFAULT_TIMEOUT_S = 90  # ref :47
 RETRY_DELAY_429_S = 30  # ref :48
@@ -43,7 +46,7 @@ class CriticalTokenError(FetchError):
 
 @dataclass
 class FetchResult:
-    retorno: dict | list
+    retorno: dict
     ok: bool
 
 
@@ -84,9 +87,8 @@ def fetch_page(
             delay = min(delay * 2, BACKOFF_CAP_S)
             continue
 
-        retorno = body.get("retorno", {})
-        api_status = retorno.get("status") if isinstance(retorno, dict) else "OK"
-        if api_status != "OK":
+        retorno = body.get("retorno")
+        if isinstance(retorno, dict) and retorno.get("status") != "OK":
             code = str(retorno.get("codigo_erro", ""))
             if code == CRITICAL_TOKEN_ERROR_CODE:
                 raise CriticalTokenError("API token rejected (codigo_erro=2)")
@@ -95,10 +97,7 @@ def fetch_page(
                 sleep(delay)
                 delay = min(delay * 2, BACKOFF_CAP_S)
                 continue
-            erros = retorno.get("erros", []) if isinstance(retorno, dict) else []
-            first = erros[0].get("erro", "") if erros else ""
-            if "Nenhum registro encontrado" in first:  # empty-success (ref :281)
-                return FetchResult(retorno, True)
-            raise FetchError(f"API status={api_status} erros={erros!r}")
+        if (fault := page_fault(retorno)) is not None:
+            raise FetchError(fault)
         return FetchResult(retorno, True)
     raise FetchError(f"retries exhausted for {url}: {last_err}")

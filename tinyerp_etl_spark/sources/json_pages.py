@@ -8,15 +8,19 @@ file per page — the natural spool format for a REST crawler feeding a
 cluster) and this module turns a directory of pages into a flat
 DataFrame of records:
 
-- explicit envelope schema (no inference on prod paths),
-- status-protocol handling: ``status != 'OK'`` is an error, except
-  "Nenhum registro encontrado" which is success-with-empty (ref
-  :281-282); processing status 3/10 OK, 2 failure (ref :275-284),
+- explicit envelope schema (no inference on prod paths), read FAILFAST
+  so a malformed page file or field value fails instead of nulling,
+- the status protocol, defined only here: ``status`` OK with processing
+  status absent, 3 or 10 is a page of records (ref :275-284); another
+  status with first error ``NO_RECORDS_ERROR`` is success-with-empty
+  (ref :281-282); any other page, null ``status`` included, is a fault,
 - record arrays are exploded and the per-record wrapper struct
   (``{"produto": {...}}``) unwrapped.
 
 At scale this reads thousands of page files in one distributed scan —
-the protocol checks are column predicates, not driver loops.
+the protocol checks are column predicates, not driver loops. The check
+is lazy, a filter right above the scan: a faulty page fails the first
+action that scans it, and no job of its own reads the pages.
 """
 
 from __future__ import annotations
@@ -29,10 +33,26 @@ from pyspark.sql import types as T
 OK_PROCESSING_STATUSES = ("3", "10")
 #: error text that actually means empty-success (ref :281-282)
 NO_RECORDS_ERROR = "Nenhum registro encontrado"
+_FAULT = "page breaks the status protocol: status=%s status_processamento=%s codigo_erro=%s erro=%s"
 
 
-class ApiProtocolError(RuntimeError):
-    """A page violated the API status protocol (ref :259-273)."""
+def page_fault(retorno) -> str | None:
+    """The rule and message of ``read_envelope_pages``'s filter, in Python:
+    None for a page of records or the empty-success page, else the fault."""
+    ret = retorno if isinstance(retorno, dict) else {}
+    first = (ret.get("erros") or [{}])[0] or {}
+    # numbers as text, as the envelope schema's string fields read them
+    fields = [
+        None if v is None else str(v)
+        for v in (ret.get("status"), ret.get("status_processamento"),
+                  ret.get("codigo_erro"), first.get("erro"))
+    ]
+    status, processing, _, first_error = fields
+    if status == "OK" and processing in (None, *OK_PROCESSING_STATUSES):
+        return None
+    if status not in (None, "OK") and NO_RECORDS_ERROR in (first_error or ""):
+        return None
+    return _FAULT % tuple("null" if v is None else v for v in fields)
 
 
 def envelope_schema(record_field: str, wrapper: str, record_schema: T.StructType) -> T.StructType:
@@ -75,19 +95,19 @@ def read_envelope_pages(
     record_field: str,
     wrapper: str,
     record_schema: T.StructType,
-    strict: bool = True,
 ) -> DataFrame:
     """Directory of page files → flat DataFrame of records.
 
-    ``strict=True`` raises ApiProtocolError if any page has a bad
-    status (the reference aborts the step on protocol errors,
-    ref :352-353); empty-success pages contribute zero rows either way.
+    A page that breaks the status protocol raises when the result is
+    first computed (the reference aborts the step, ref :352-353);
+    empty-success pages contribute zero rows.
     """
     schema = envelope_schema(record_field, wrapper, record_schema)
-    raw = spark.read.schema(schema).json(path)
+    raw = spark.read.schema(schema).option("mode", "FAILFAST").json(path)
 
     ret = F.col("retorno")
-    first_error = F.element_at(ret["erros"], 1)["erro"]
+    # try_: an error page with empty ``erros`` is a fault, not an index error
+    first_error = F.try_element_at(ret["erros"], F.lit(1))["erro"]
     is_empty_success = (ret["status"] != "OK") & (
         F.coalesce(first_error, F.lit("")).contains(NO_RECORDS_ERROR)
     )
@@ -95,23 +115,13 @@ def read_envelope_pages(
         ret["status_processamento"].isNull()
         | ret["status_processamento"].isin(*OK_PROCESSING_STATUSES)
     )
-
-    if strict:
-        bad = raw.filter(~is_ok & ~is_empty_success).select(
-            ret["status"].alias("status"),
-            ret["codigo_erro"].alias("codigo_erro"),
-            first_error.alias("erro"),
-        )
-        bad_rows = bad.limit(1).collect()
-        if bad_rows:
-            r = bad_rows[0]
-            raise ApiProtocolError(
-                f"page with status={r['status']} codigo_erro={r['codigo_erro']} "
-                f"erro={r['erro']!r}"
-            )
+    fault = F.format_string(
+        _FAULT, ret["status"], ret["status_processamento"], ret["codigo_erro"], first_error
+    )
+    keep = F.when(is_ok, True).when(is_empty_success, False).otherwise(F.raise_error(fault))
 
     return (
-        raw.filter(is_ok)
+        raw.filter(keep)
         .select(F.explode(ret[record_field]).alias("__rec"))
         .select(F.col(f"__rec.{wrapper}.*"))
     )

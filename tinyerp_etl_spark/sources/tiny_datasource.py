@@ -5,7 +5,8 @@ plus column-level protocol checks — the declarative path. This module
 is the *connector* path: the same envelope protocol packaged as a
 first-class ``spark.read.format("tiny_pages")`` / ``spark.readStream
 .format("tiny_pages")`` source via the Python DataSource API, the way
-a live REST source would ship to users of the engine.
+a live REST source would ship to users of the engine; pages are judged
+by the shared status rule, ``json_pages.page_fault``.
 
 Mapping to the reference (tiny_api_v2_cliente.py):
 - one page file == one API page response (envelope unwrap, ref
@@ -25,7 +26,8 @@ Options:
 - ``wrapper``: per-record wrapper key (e.g. ``produto``).
 
 The user supplies the record schema with ``.schema(...)``; string,
-integer and double fields are coerced from the JSON values.
+integer and double fields are coerced from the JSON values, and a
+value that does not coerce fails the read.
 """
 
 from __future__ import annotations
@@ -42,8 +44,7 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql import types as T
 
-#: error text that actually means empty-success (ref :281-282)
-NO_RECORDS_ERROR = "Nenhum registro encontrado"
+from tinyerp_etl_spark.sources.json_pages import page_fault
 
 
 @dataclass
@@ -54,28 +55,21 @@ class PagePartition(InputPartition):
 def _coerce(value, dtype: T.DataType):
     if value is None:
         return None
-    try:
-        if isinstance(dtype, (T.IntegerType, T.LongType)):
-            return int(value)
-        if isinstance(dtype, (T.DoubleType, T.FloatType)):
-            return float(value)
-    except (TypeError, ValueError):
-        return None
+    if isinstance(dtype, (T.IntegerType, T.LongType)):
+        return int(value)
+    if isinstance(dtype, (T.DoubleType, T.FloatType)):
+        return float(value)
     return str(value)
 
 
 def _parse_page(path: str, record_field: str, wrapper: str, schema: T.StructType):
     """Yield one tuple per record in a page file, enforcing the protocol."""
     with open(path, encoding="utf-8") as fh:
-        retorno = json.load(fh).get("retorno", {})
-    status = retorno.get("status")
-    if status is not None and status != "OK":
-        erros = [e.get("erro", "") for e in retorno.get("erros", []) or []]
-        if any(NO_RECORDS_ERROR in e for e in erros):
-            return  # success-with-empty (ref :281-282)
-        raise RuntimeError(f"page {os.path.basename(path)} status={status}: {erros}")
-    if retorno.get("status_processamento") == "2":
-        raise RuntimeError(f"page {os.path.basename(path)} processing status 2")
+        retorno = json.load(fh).get("retorno")
+    if (fault := page_fault(retorno)) is not None:
+        raise RuntimeError(f"{os.path.basename(path)}: {fault}")
+    if retorno["status"] != "OK":
+        return  # success-with-empty (ref :281-282)
     for item in retorno.get(record_field) or []:
         rec = item.get(wrapper, {})
         yield tuple(_coerce(rec.get(f.name), f.dataType) for f in schema.fields)
@@ -87,17 +81,14 @@ def _page_files(path: str) -> list[str]:
     )
 
 
-class TinyPagesBatchReader(DataSourceReader):
+class _PageReader:
+    """Options and per-page parsing shared by the batch and stream readers."""
+
     def __init__(self, schema: T.StructType, options: dict):
         self.schema_ = schema
         self.path = options["path"]
         self.record_field = options.get("record_field", "registros")
         self.wrapper = options.get("wrapper", "registro")
-
-    def partitions(self):
-        # one partition per page: planning stays driver-side and tiny
-        # (file names only); parsing runs on executors
-        return [PagePartition(p) for p in _page_files(self.path)]
 
     def read(self, partition: PagePartition):
         yield from _parse_page(
@@ -105,7 +96,14 @@ class TinyPagesBatchReader(DataSourceReader):
         )
 
 
-class TinyPagesStreamReader(DataSourceStreamReader):
+class TinyPagesBatchReader(_PageReader, DataSourceReader):
+    def partitions(self):
+        # one partition per page: planning stays driver-side and tiny
+        # (file names only); parsing runs on executors
+        return [PagePartition(p) for p in _page_files(self.path)]
+
+
+class TinyPagesStreamReader(_PageReader, DataSourceStreamReader):
     """Micro-batch reader: offset = count of pages already ingested.
 
     ``initialOffset`` -> 0 pages; each trigger ingests every page the
@@ -114,12 +112,6 @@ class TinyPagesStreamReader(DataSourceStreamReader):
     uncommitted tail — the reference's resume-at-``pagina_salva + 1``
     (ref :217-220) with the offset log owning the bookkeeping.
     """
-
-    def __init__(self, schema: T.StructType, options: dict):
-        self.schema_ = schema
-        self.path = options["path"]
-        self.record_field = options.get("record_field", "registros")
-        self.wrapper = options.get("wrapper", "registro")
 
     def initialOffset(self):
         return {"pages": 0}
@@ -130,11 +122,6 @@ class TinyPagesStreamReader(DataSourceStreamReader):
     def partitions(self, start: dict, end: dict):
         files = _page_files(self.path)
         return [PagePartition(p) for p in files[start["pages"] : end["pages"]]]
-
-    def read(self, partition: PagePartition):
-        yield from _parse_page(
-            partition.path, self.record_field, self.wrapper, self.schema_
-        )
 
     def commit(self, end: dict) -> None:
         # offsets live in the checkpoint log; no source-side state
