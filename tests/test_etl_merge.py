@@ -104,6 +104,23 @@ def test_replace_children_idempotent(spark):
     assert _rows(once) == _rows(twice)
 
 
+def test_replace_children_shared_lineage(spark):
+    """existing and incoming derived from one DataFrame (as in
+    replace_order_items) still anti-join as two distinct sides."""
+    from tinyerp_etl_spark.etl.merge import replace_children
+
+    base = spark.createDataFrame(
+        [(1, 1, "a"), (1, 2, "b"), (2, 1, "x"), (3, 1, "y")],
+        "order_id int, line int, v string",
+    )
+    existing = base.filter(F.col("order_id") <= 2)
+    incoming = base.filter(
+        (F.col("order_id") != 2) & (F.col("line") == 1)
+    ).withColumn("v", F.upper("v"))
+    out = replace_children(existing, incoming, "order_id")
+    assert _rows(out) == [(1, 1, "A"), (2, 1, "x"), (3, 1, "Y")]
+
+
 def test_fk_orphans_and_cascade(spark):
     parent = spark.createDataFrame([(1,), (2,)], "pk int")
     child = spark.createDataFrame(

@@ -304,6 +304,31 @@ def test_bad_page_in_a_sync_step_changes_no_stored_state(spark, tmp_path, keep_l
     assert _kv_rows(store.read()) == EXISTING
 
 
+def test_sync_step_conflicts_with_a_writer_landing_mid_commit(spark, tmp_path, monkeypatch):
+    """Another writer lands a version while the step's MERGE is being
+    written: the step commits against the version it read, so it fails
+    (ERRO) instead of claiming the next version and dropping that
+    writer's rows."""
+    store = TableStore(spark, str(tmp_path / "kv"), KV)
+    store.commit(spark.createDataFrame(EXISTING, KV))
+    other = [(9, 90, 1)]
+    stage_write = store._stage_write
+
+    def other_writer_lands_first(*args, **kwargs):
+        TableStore(spark, store.path, KV).commit(spark.createDataFrame(other, KV))
+        return stage_write(*args, **kwargs)
+
+    monkeypatch.setattr(store, "_stage_write", other_writer_lands_first)
+    page_df = _envelope_page(spark, tmp_path, [(1, 11, 2)])
+    res = _sync_one_page(spark, tmp_path, store, page_df, keep_latest=True)
+    assert res.status == STATUS_ERROR
+    assert "advanced to v2" in res.error
+    assert store.current_version() == 2
+    assert _kv_rows(store.read()) == other
+    assert not [p for p in os.listdir(tmp_path / "kv") if p.startswith(".staging-")]
+    assert PageCheckpoint(spark, str(tmp_path / "cp")).progress("kv").pagina_atual == 0
+
+
 def test_pipeline_steps_fail_independently(spark, sf_dir, stores, tmp_path):
     wm, cp, tgt = stores
 

@@ -15,6 +15,8 @@ from tinyerp_etl_spark.sources.fetcher import (
     mask_token,
 )
 from tinyerp_etl_spark.sources.json_pages import (
+    envelope_records,
+    envelope_schema,
     flatten_order_items,
     read_envelope_pages,
 )
@@ -143,12 +145,15 @@ ID_LONG = T.StructType([T.StructField("id", T.LongType())])
         GOOD_PAGE[:-7],
         json.dumps(json.loads(GOOD_PAGE), indent=2),
         GOOD_PAGE.replace('"id": 1', '"id": "x1"'),
+        GOOD_PAGE.replace('"id": 1', '"id": "10"'),
     ],
-    ids=["truncated", "multi_line", "x1_under_long"],
+    ids=["truncated", "multi_line", "x1_under_long", "numeric_string_under_long"],
 )
 def test_malformed_page_file_fails_the_read(spark, tmp_path, bad):
     """FAILFAST: a page file Spark cannot parse under the envelope schema
-    fails the read instead of vanishing or turning into nulls."""
+    fails the read instead of vanishing or turning into nulls. A record
+    value must already have its declared type: a numeric string under a
+    ``long`` field is not cast."""
     d = tmp_path / "pages"
     d.mkdir()
     (d / "p1.json").write_text(GOOD_PAGE)
@@ -189,27 +194,18 @@ def _outcome(read):
 
 @pytest.mark.parametrize("case", list(VERDICTS))
 def test_all_page_readers_give_the_same_verdict(spark, tmp_path, case):
-    """read_envelope_pages, the tiny_pages DataSource and fetch_page
-    apply one status rule: same records, same empty page, same faults."""
+    """read_envelope_pages and fetch_page apply one status rule: same
+    records, same empty page, same faults."""
     envelope, expected = VERDICTS[case]
     d = tmp_path / "pages"
     d.mkdir()
     _write_page(d / "page_0001.json", envelope)
-    _register_tiny_pages(spark)
-    source = (
-        spark.read.format("tiny_pages")
-        .schema(PRODUTO_SCHEMA)
-        .option("path", str(d))
-        .option("record_field", "produtos")
-        .option("wrapper", "produto")
-    )
     got = {
         "read_envelope_pages": _outcome(lambda: len(read_envelope_pages(
             spark, str(d), "produtos", "produto", PRODUTO_SCHEMA).collect())),
-        "tiny_pages": _outcome(lambda: len(source.load().collect())),
         "fetch_page": _outcome(lambda: len(fetch_page(
             _transport_seq([(200, envelope)]), "u", {}, sleep=_no_sleep
-        ).retorno.get("produtos") or [])),
+        ).get("produtos") or [])),
     }
     assert got == dict.fromkeys(got, expected)
 
@@ -274,7 +270,7 @@ def _no_sleep(_):
 def test_fetch_ok_first_try():
     body = {"retorno": {"status": "OK", "produtos": []}}
     res = fetch_page(_transport_seq([(200, body)]), "u", {}, sleep=_no_sleep)
-    assert res.ok and res.retorno["status"] == "OK"
+    assert res == body["retorno"]
 
 
 def test_fetch_retries_network_errors_with_backoff():
@@ -286,7 +282,7 @@ def test_fetch_retries_network_errors_with_backoff():
         {},
         sleep=delays.append,
     )
-    assert res.ok
+    assert res == body["retorno"]
     assert delays == [2.0, 4.0]  # exponential ×2 (ref :236)
 
 
@@ -296,7 +292,7 @@ def test_fetch_429_uses_fixed_delay():
     res = fetch_page(
         _transport_seq([(429, {}), (200, body)]), "u", {}, sleep=delays.append
     )
-    assert res.ok
+    assert res == body["retorno"]
     assert delays == [30]  # RETRY_DELAY_429 (ref :48, :290)
 
 
@@ -309,7 +305,7 @@ def test_fetch_error_code_35_forces_retry():
     bad = {"retorno": {"status": "Erro", "codigo_erro": "35"}}
     good = {"retorno": {"status": "OK"}}
     res = fetch_page(_transport_seq([(200, bad), (200, good)]), "u", {}, sleep=_no_sleep)
-    assert res.ok
+    assert res == good["retorno"]
 
 
 def test_fetch_token_error_is_critical():
@@ -326,7 +322,7 @@ def test_fetch_empty_success():
         }
     }
     res = fetch_page(_transport_seq([(200, body)]), "u", {}, sleep=_no_sleep)
-    assert res.ok
+    assert res == body["retorno"]
 
 
 def test_fetch_retries_exhausted():
@@ -371,10 +367,10 @@ def test_jsonl_roundtrip_preserves_timestamps(spark, sf_dir, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# custom Python DataSource (tiny_pages) — batch + streaming
+# streaming page reads: the file-source offset log is the page checkpoint
 # ---------------------------------------------------------------------------
 
-def _stage_pages(d, n_pages=2, empty_last=False):
+def _stage_pages(d, n_pages):
     d.mkdir(parents=True, exist_ok=True)
     for i in range(1, n_pages + 1):
         _write_page(
@@ -392,100 +388,23 @@ def _stage_pages(d, n_pages=2, empty_last=False):
                 }
             },
         )
-    if empty_last:
-        _write_page(
-            d / f"page_{n_pages + 1:04d}.json",
-            {
-                "retorno": {
-                    "status": "Erro",
-                    "erros": [{"erro": "Nenhum registro encontrado"}],
-                }
-            },
-        )
 
 
-def _register_tiny_pages(spark):
-    from tinyerp_etl_spark.sources.tiny_datasource import TinyPagesDataSource
-
-    spark.dataSource.register(TinyPagesDataSource)
-
-
-def test_tiny_pages_batch_read(spark, tmp_path):
-    d = tmp_path / "pages"
-    _stage_pages(d, n_pages=3, empty_last=True)
-    _register_tiny_pages(spark)
-    df = (
-        spark.read.format("tiny_pages")
-        .schema("id long, nome string, preco string")
-        .option("path", str(d))
-        .option("record_field", "produtos")
-        .option("wrapper", "produto")
-        .load()
-    )
-    rows = sorted(df.collect(), key=lambda r: r.id)
-    assert len(rows) == 9  # 3 pages x 3 records; empty-success page adds 0
-    assert rows[0].id == 10 and rows[0].nome == "p1-0" and rows[0].preco == "1,50"
-    # partition planning: one partition per page file
-    assert df.rdd.getNumPartitions() == 4
-
-
-def test_tiny_pages_batch_protocol_error(spark, tmp_path):
-    d = tmp_path / "pages"
-    _stage_pages(d, n_pages=1)
-    _write_page(
-        d / "page_0002.json",
-        {"retorno": {"status": "Erro", "erros": [{"erro": "Token invalido"}]}},
-    )
-    _register_tiny_pages(spark)
-    df = (
-        spark.read.format("tiny_pages")
-        .schema("id long, nome string, preco string")
-        .option("path", str(d))
-        .option("record_field", "produtos")
-        .option("wrapper", "produto")
-        .load()
-    )
-    with pytest.raises(Exception, match="Token invalido"):
-        df.collect()
-
-
-def test_tiny_pages_value_that_does_not_coerce_fails(spark, tmp_path):
-    d = tmp_path / "pages"
-    d.mkdir()
-    _write_page(d / "page_0001.json", json.loads(GOOD_PAGE.replace('"id": 1', '"id": "x1"')))
-    _register_tiny_pages(spark)
-    df = (
-        spark.read.format("tiny_pages")
-        .schema("id long")
-        .option("path", str(d))
-        .option("record_field", "produtos")
-        .option("wrapper", "produto")
-        .load()
-    )
-    with pytest.raises(Exception, match="x1"):
-        df.collect()
-
-
-def test_tiny_pages_stream_resumes_from_offset(spark, tmp_path):
-    """Streaming offsets == pages ingested; new pages arrive in the next
-    micro-batch and a restart does not re-read committed pages —
-    the reference's page-checkpoint contract (ref :183-223)."""
+def test_envelope_pages_stream_resumes_from_offset(spark, tmp_path):
+    """New pages arrive in the next micro-batch and a restart does not
+    re-read committed pages — the reference's page-checkpoint contract
+    (ref :183-223); an error page fails the query."""
     d = tmp_path / "pages"
     _stage_pages(d, n_pages=2)
-    _register_tiny_pages(spark)
     ckpt = str(tmp_path / "ckpt")
+    schema = envelope_schema("produtos", "produto", PRODUTO_SCHEMA)
 
     def run_once():
-        reader = (
-            spark.readStream.format("tiny_pages")
-            .schema("id long, nome string, preco string")
-            .option("path", str(d))
-            .option("record_field", "produtos")
-            .option("wrapper", "produto")
-            .load()
-        )
+        raw = spark.readStream.schema(schema).option("mode", "FAILFAST").json(str(d))
+        records = envelope_records(raw, "produtos", "produto")
         q = (
-            reader.writeStream.format("parquet")
+            records.withColumn("id", F.col("id").cast("long"))
+            .writeStream.format("parquet")
             .option("path", str(tmp_path / "out"))
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
@@ -494,15 +413,18 @@ def test_tiny_pages_stream_resumes_from_offset(spark, tmp_path):
         q.awaitTermination(120)
 
     run_once()
-    out1 = spark.read.parquet(str(tmp_path / "out"))
-    assert out1.count() == 6  # 2 pages x 3 records
+    assert spark.read.parquet(str(tmp_path / "out")).count() == 6  # 2 pages x 3 records
 
     # spooler lands one more page; restart picks up ONLY the new page
     _stage_pages(d, n_pages=3)  # rewrites pages 1-2 identically, adds page 3
     run_once()
-    out2 = spark.read.parquet(str(tmp_path / "out"))
-    assert out2.count() == 9
-    assert out2.filter("id >= 30").count() == 3
+    out = spark.read.parquet(str(tmp_path / "out"))
+    assert out.count() == 9
+    assert out.filter("id >= 30").count() == 3
+
+    _write_page(d / "page_0004.json", ERROR_32)
+    with pytest.raises(Exception, match="page breaks the status protocol"):
+        run_once()
 
 
 def test_events_ts_sanity_bounds(spark, sf_dir):

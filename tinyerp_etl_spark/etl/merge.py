@@ -88,22 +88,11 @@ def replace_children(
     DDL :89 ON DELETE CASCADE) — child rows have no stable identity of
     their own, so per-row upsert would leak deleted items. Expressed
     as: (existing ∖ incoming-parents) ∪ incoming — one anti-join on
-    the parent key.
+    the parent key, joined by column name so inputs that share lineage
+    (both derived from one DataFrame) still resolve to distinct sides.
     """
     keys = [parent_key] if isinstance(parent_key, str) else list(parent_key)
-    # rename the parent-key columns before the anti-join: when existing
-    # and incoming share lineage (both derived from one DataFrame), a
-    # same-name join key resolves both sides to the SAME attribute and
-    # the anti-join silently matches nothing/everything
-    parents = incoming.select(
-        *[F.col(k).alias(f"__pk_{k}") for k in keys]
-    ).distinct()
-    cond = None
-    for k in keys:
-        clause = existing[k] == parents[f"__pk_{k}"]
-        cond = clause if cond is None else (cond & clause)
-    survivors = existing.join(parents, cond, "left_anti")
-    return survivors.unionByName(incoming)
+    return existing.join(incoming.select(*keys), keys, "left_anti").unionByName(incoming)
 
 
 def snapshot_diff(
@@ -119,8 +108,8 @@ def snapshot_diff(
     inverse of MERGE: where merge_upsert applies a change set, this
     recovers one — auditing what an incremental load actually did, or
     emitting a downstream CDC feed from snapshots. Keys are renamed on
-    the old side so shared-lineage inputs can't alias (see
-    replace_children).
+    the old side so shared-lineage inputs can't alias in the join
+    condition.
     """
     compare = list(
         compare_cols

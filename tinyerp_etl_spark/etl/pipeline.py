@@ -8,7 +8,9 @@ Re-expresses ``executar_etapa_paginada`` (ref tiny_api_v2_cliente.py:
   ``funcao_busca`` loaders (ref :348);
 - each page's DataFrame is transformed, then MERGE-upserted into a
   versioned TableStore (idempotent sink ⇒ at-least-once delivery from
-  the watermark layer becomes effectively exactly-once);
+  the watermark layer becomes effectively exactly-once), committed
+  against the version it read, so a concurrent writer fails the step
+  instead of losing its rows;
 - page progress goes through PageCheckpoint (resume at saved+1,
   ref :183-223); the page cap leaves status EM_ANDAMENTO for the next
   run (ref :368-370); failures mark ERRO and halt the step without
@@ -132,12 +134,16 @@ def run_entity_sync(
             if page_df is not None:
                 rows = Observation()
                 page_df = page_df.observe(rows, F.count(F.lit(1)).alias("n"))
+                # pinned before the read: the commit raises
+                # ConcurrentWriteError if any writer landed after ``base``;
+                # ``or 0`` keeps that check armed for a store with no version
+                base = cfg.store.current_version()
                 merged = merge_upsert(
                     cfg.store.read(), page_df, cfg.keys, cfg.order_by
                 )
                 # the commit's write is the first action on ``merged``:
                 # the only one an Observation reports
-                cfg.store.commit(merged)
+                cfg.store.commit(merged, expected_version=base or 0)
                 n = _observed_rows(rows)
             checkpoints.advance(cfg.name, page, total_pages, n)
             pages_done += 1

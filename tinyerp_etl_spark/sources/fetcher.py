@@ -22,8 +22,7 @@ and without the ``requests`` dependency.
 from __future__ import annotations
 
 import time
-from collections.abc import Callable
-from dataclasses import dataclass
+from collections.abc import Callable, Iterator
 
 from tinyerp_etl_spark.sources.json_pages import page_fault
 
@@ -44,15 +43,16 @@ class CriticalTokenError(FetchError):
     """API error code 2: invalid/expired token — do not retry (ref :272)."""
 
 
-@dataclass
-class FetchResult:
-    retorno: dict
-    ok: bool
-
-
 def mask_token(token: str, keep: int = 5) -> str:
     """Log-hygiene masking (ref :230)."""
     return token[:keep] + "..."
+
+
+def _backoff(delay: float) -> Iterator[float]:
+    """Exponential retry delays: ``delay``, then ×2 up to the cap (ref :236)."""
+    while True:
+        yield delay
+        delay = min(delay * 2, BACKOFF_CAP_S)
 
 
 def fetch_page(
@@ -62,17 +62,17 @@ def fetch_page(
     max_retries: int = 3,
     initial_retry_delay: float = 2.0,
     sleep: Callable[[float], None] = time.sleep,
-) -> FetchResult:
-    """One page fetch with the reference's full retry protocol."""
-    delay = initial_retry_delay
+) -> dict:
+    """One page fetch with the reference's full retry protocol; returns
+    the page's ``retorno`` object. Every failure raises."""
+    delays = _backoff(initial_retry_delay)
     last_err: str = "exhausted retries"
     for _attempt in range(max_retries + 1):
         try:
             status, body = transport(url, params)
         except Exception as exc:  # network/timeout: retry (ref :292-295)
             last_err = f"transport error: {exc}"
-            sleep(delay)
-            delay = min(delay * 2, BACKOFF_CAP_S)  # ref :236
+            sleep(next(delays))
             continue
 
         if status == 429:  # rate limited: fixed long wait (ref :290)
@@ -83,8 +83,7 @@ def fetch_page(
             raise FetchError(f"HTTP {status} for {url}")
         if status >= 500:  # server error: retry
             last_err = f"HTTP {status}"
-            sleep(delay)
-            delay = min(delay * 2, BACKOFF_CAP_S)
+            sleep(next(delays))
             continue
 
         retorno = body.get("retorno")
@@ -94,10 +93,9 @@ def fetch_page(
                 raise CriticalTokenError("API token rejected (codigo_erro=2)")
             if code == FORCED_RETRY_ERROR_CODE:  # transient API hiccup
                 last_err = "API codigo_erro=35"
-                sleep(delay)
-                delay = min(delay * 2, BACKOFF_CAP_S)
+                sleep(next(delays))
                 continue
         if (fault := page_fault(retorno)) is not None:
             raise FetchError(fault)
-        return FetchResult(retorno, True)
+        return retorno
     raise FetchError(f"retries exhausted for {url}: {last_err}")

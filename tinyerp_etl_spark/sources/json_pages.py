@@ -6,10 +6,19 @@ Tiny ERP v2 API (ref tiny_api_v2_cliente.py:225-302: token auth,
 :259-285). In the Spark engine, fetched pages land as JSON files (one
 file per page — the natural spool format for a REST crawler feeding a
 cluster) and this module turns a directory of pages into a flat
-DataFrame of records:
+DataFrame of records, in batch (``read_envelope_pages``) or as a
+stream (``envelope_records`` over ``spark.readStream`` of the same
+schema, whose file-source offset log resumes at the next unseen page,
+the reference's page checkpoint, ref :183-223):
 
 - explicit envelope schema (no inference on prod paths), read FAILFAST
   so a malformed page file or field value fails instead of nulling,
+- record values follow the JSON reader's one rule: a numeric field
+  takes only a JSON number that fits its type, never a numeric string
+  (a ``double`` field also takes ``"NaN"`` and ``"Infinity"``); a
+  ``string`` field takes any scalar as its text. The Tiny API sends
+  ids as ``"10"``, so such fields are declared ``string`` and cast in
+  the entity transform; declared ``long``, the read fails,
 - the status protocol, defined only here: ``status`` OK with processing
   status absent, 3 or 10 is a page of records (ref :275-284); another
   status with first error ``NO_RECORDS_ERROR`` is success-with-empty
@@ -37,7 +46,7 @@ _FAULT = "page breaks the status protocol: status=%s status_processamento=%s cod
 
 
 def page_fault(retorno) -> str | None:
-    """The rule and message of ``read_envelope_pages``'s filter, in Python:
+    """The rule and message of ``envelope_records``'s filter, in Python:
     None for a page of records or the empty-success page, else the fault."""
     ret = retorno if isinstance(retorno, dict) else {}
     first = (ret.get("erros") or [{}])[0] or {}
@@ -89,22 +98,14 @@ def envelope_schema(record_field: str, wrapper: str, record_schema: T.StructType
     )
 
 
-def read_envelope_pages(
-    spark: SparkSession,
-    path: str,
-    record_field: str,
-    wrapper: str,
-    record_schema: T.StructType,
-) -> DataFrame:
-    """Directory of page files → flat DataFrame of records.
+def envelope_records(raw: DataFrame, record_field: str, wrapper: str) -> DataFrame:
+    """Envelope DataFrame (batch or streaming, read under
+    ``envelope_schema``) → flat DataFrame of records.
 
     A page that breaks the status protocol raises when the result is
     first computed (the reference aborts the step, ref :352-353);
     empty-success pages contribute zero rows.
     """
-    schema = envelope_schema(record_field, wrapper, record_schema)
-    raw = spark.read.schema(schema).option("mode", "FAILFAST").json(path)
-
     ret = F.col("retorno")
     # try_: an error page with empty ``erros`` is a fault, not an index error
     first_error = F.try_element_at(ret["erros"], F.lit(1))["erro"]
@@ -125,6 +126,19 @@ def read_envelope_pages(
         .select(F.explode(ret[record_field]).alias("__rec"))
         .select(F.col(f"__rec.{wrapper}.*"))
     )
+
+
+def read_envelope_pages(
+    spark: SparkSession,
+    path: str,
+    record_field: str,
+    wrapper: str,
+    record_schema: T.StructType,
+) -> DataFrame:
+    """Directory of page files → flat DataFrame of records."""
+    schema = envelope_schema(record_field, wrapper, record_schema)
+    raw = spark.read.schema(schema).option("mode", "FAILFAST").json(path)
+    return envelope_records(raw, record_field, wrapper)
 
 
 def flatten_order_items(
