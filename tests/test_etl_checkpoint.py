@@ -4,9 +4,13 @@ from __future__ import annotations
 
 import json
 import os
+import sys
+import time
+from concurrent.futures import ThreadPoolExecutor
 
 import pytest
 
+from tinyerp_etl_spark.etl import checkpoint
 from tinyerp_etl_spark.etl.checkpoint import (
     STATUS_DONE,
     STATUS_ERROR,
@@ -103,3 +107,39 @@ def test_failed_write_leaves_previous_progress(spark, tmp_path, monkeypatch, cra
     assert os.listdir(tmp_path) == ["cp"]  # no temp file left behind
     # the interrupted run still resumes after the last committed page
     assert cp.start("produtos", "01/08/2026 00:00:00") == 4
+
+
+def test_concurrent_updates_keep_every_process_row(spark, tmp_path, monkeypatch):
+    """Threads updating different processes on one instance (concurrent
+    sync steps): each update reads and replaces the whole document, so
+    without the instance's lock a thread would write back a document
+    missing another's row. The read sleeps to make the threads overlap."""
+    cp = PageCheckpoint(spark, str(tmp_path / "cp"))
+    read_json = checkpoint.read_json
+
+    def slow_read(path):
+        got = read_json(path)
+        time.sleep(0.02)
+        return got
+
+    def cycle(process):
+        assert cp.start(process, "01/08/2026 00:00:00") == 1
+        cp.advance(process, 1, 2, 10)
+        cp.advance(process, 2, 2, 5)
+        cp.finish(process, STATUS_DONE)
+
+    monkeypatch.setattr(checkpoint, "read_json", slow_read)
+    processes = [f"entity_{i}" for i in range(8)]
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(len(processes)) as pool:
+            for fut in [pool.submit(cycle, p) for p in processes]:
+                fut.result(timeout=60)
+    finally:
+        sys.setswitchinterval(switch)
+    monkeypatch.undo()
+    for p in processes:
+        got = cp.progress(p)
+        assert (got.pagina_atual, got.registros_processados, got.status_execucao) == (
+            2, 15, STATUS_DONE)

@@ -9,6 +9,8 @@ from __future__ import annotations
 
 import json
 import os
+import threading
+import time
 from datetime import datetime, timedelta, timezone
 
 import pytest
@@ -342,6 +344,130 @@ def test_pipeline_steps_fail_independently(spark, sf_dir, stores, tmp_path):
     ]
     results = run_pipeline(spark, syncs, wm, cp, now=NOW)
     assert [r.status for r in results] == [STATUS_ERROR, STATUS_DONE]
+
+
+def _kv_sync(spark, name, store, rows, before=lambda: None, **kw):
+    """A one-page step serving ``rows``, calling ``before`` first."""
+    def source(_ts, _page):
+        before()
+        return spark.createDataFrame(rows, KV), 1
+
+    return EntitySync(name=name, source=source, store=store, keys=["k"], **kw)
+
+
+def _control(spark, tmp_path):
+    return (WatermarkStore(spark, str(tmp_path / "wm")),
+            PageCheckpoint(spark, str(tmp_path / "cp")))
+
+
+def test_pipeline_runs_steps_concurrently(spark, tmp_path):
+    """Each source waits for the other's at one barrier: only steps
+    running at the same time get past it."""
+    barrier = threading.Barrier(2, timeout=60)
+    a = TableStore(spark, str(tmp_path / "a"), KV)
+    b = TableStore(spark, str(tmp_path / "b"), KV)
+    rows_a, rows_b = [(1, 10, 1), (2, 20, 1)], [(3, 30, 1), (4, 40, 1), (5, 50, 1)]
+    syncs = [_kv_sync(spark, "a", a, rows_a, barrier.wait),
+             _kv_sync(spark, "b", b, rows_b, barrier.wait)]
+    wm, cp = _control(spark, tmp_path)
+    results = run_pipeline(spark, syncs, wm, cp, now=NOW)
+    assert [(r.name, r.status, r.records, r.error) for r in results] == [
+        ("a", STATUS_DONE, 2, None), ("b", STATUS_DONE, 3, None)]
+    assert (_kv_rows(a.read()), _kv_rows(b.read())) == (rows_a, rows_b)
+    assert (wm.get("a"), wm.get("b")) == (NOW, NOW)
+
+
+@pytest.mark.parametrize("a_fails", [False, True], ids=["a_done", "a_error"])
+def test_after_step_reads_the_store_its_dependency_left(spark, tmp_path, a_fails):
+    """``b`` copies ``a``'s store: it starts once ``a`` returned, so it
+    reads ``a``'s new version (``a`` is slow, so an unordered ``b``
+    would read the old one); ``a``'s failure does not stop ``b``."""
+    a = TableStore(spark, str(tmp_path / "a"), KV)
+    a.commit(spark.createDataFrame(EXISTING, KV))
+    b = TableStore(spark, str(tmp_path / "b"), KV)
+
+    def slow_a():
+        time.sleep(1)
+        if a_fails:
+            raise RuntimeError("a down")
+
+    syncs = [_kv_sync(spark, "a", a, [(7, 70, 1)], slow_a),
+             EntitySync(name="b", source=lambda _ts, _page: (a.read(), 1), store=b,
+                        keys=["k"], after=("a",))]
+    wm, cp = _control(spark, tmp_path)
+    results = run_pipeline(spark, syncs, wm, cp, now=NOW)
+    if a_fails:
+        assert [r.status for r in results] == [STATUS_ERROR, STATUS_DONE]
+        assert _kv_rows(b.read()) == EXISTING
+    else:
+        assert [r.status for r in results] == [STATUS_DONE, STATUS_DONE]
+        assert _kv_rows(b.read()) == sorted(EXISTING + [(7, 70, 1)])
+
+
+def test_caller_job_group_holds_every_pipeline_job(spark, tmp_path):
+    """The steps' threads inherit the caller's job group: every job
+    started between two marker jobs is in it."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def marker_jobs(group):
+        sc.setJobGroup(group, "marker")
+        spark.range(1).collect()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return tracker.getJobIdsForGroup(group)
+
+    syncs = [_kv_sync(spark, "a", TableStore(spark, str(tmp_path / "a"), KV), [(1, 10, 1)]),
+             _kv_sync(spark, "b", TableStore(spark, str(tmp_path / "b"), KV), [(2, 20, 1)])]
+    wm, cp = _control(spark, tmp_path)
+    try:
+        first = max(marker_jobs("pipeline-group-before"))
+        sc.setJobGroup("pipeline-group", "two concurrent steps")
+        results = run_pipeline(spark, syncs, wm, cp, now=NOW)
+        last = min(marker_jobs("pipeline-group-after"))
+    finally:
+        sc.setJobGroup(None, None)
+    assert [r.status for r in results] == [STATUS_DONE, STATUS_DONE]
+    jobs = set(tracker.getJobIdsForGroup("pipeline-group"))
+    assert jobs and jobs == set(range(first + 1, last))
+
+
+def _empty_steps(spark, tmp_path, steps, calls):
+    """(name, store dir, after) steps whose source records a call and
+    serves no page."""
+    def source(_ts, _page):
+        calls.append(1)
+        return None, 0
+
+    return [EntitySync(name=name, source=source, store=TableStore(spark, str(tmp_path / path), KV),
+                       keys=["k"], after=after) for name, path, after in steps]
+
+
+@pytest.mark.parametrize("steps, match", [
+    ([("a", "s1", ()), ("a", "s2", ())], "two sync steps are named 'a'"),
+    ([("a", "s1", ()), ("b", "s2", ("zzz",))], "'zzz', which is not an earlier step"),
+    ([("a", "s1", ("a",))], "'a', which is not an earlier step"),
+    ([("a", "s1", ("b",)), ("b", "s2", ("a",))], "'b', which is not an earlier step"),
+    ([("a", "s1", ()), ("m", "s2", ()), ("b", "s1", ("m",))],
+     "'a' and 'b' both write .*s1 but 'b' is not ordered after 'a'"),
+], ids=["duplicate_name", "unknown_after", "self_after", "cycle", "unordered_writers"])
+def test_pipeline_contract_violation_runs_no_step(spark, tmp_path, steps, match):
+    calls = []
+    wm, cp = _control(spark, tmp_path)
+    with pytest.raises(ValueError, match=match):
+        run_pipeline(spark, _empty_steps(spark, tmp_path, steps, calls), wm, cp, now=NOW)
+    assert calls == []
+    assert not (tmp_path / "cp").exists() and not (tmp_path / "wm").exists()
+
+
+def test_writers_of_one_store_ordered_through_a_chain_run(spark, tmp_path):
+    """``b`` writes ``a``'s store and is ordered after it through ``m``."""
+    calls = []
+    steps = [("a", "s1", ()), ("m", "s2", ("a",)), ("b", "s1", ("m",))]
+    wm, cp = _control(spark, tmp_path)
+    results = run_pipeline(spark, _empty_steps(spark, tmp_path, steps, calls), wm, cp, now=NOW)
+    assert [(r.name, r.status) for r in results] == [
+        ("a", STATUS_DONE), ("m", STATUS_DONE), ("b", STATUS_DONE)]
+    assert len(calls) == 3
 
 
 def test_schema_evolution_add_column(spark, sf_dir, tmp_path):

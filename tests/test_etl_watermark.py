@@ -3,10 +3,14 @@
 from __future__ import annotations
 
 import os
+import sys
+import time
+from concurrent.futures import ThreadPoolExecutor
 from datetime import datetime, timedelta, timezone
 
 import pytest
 
+from tinyerp_etl_spark.etl import watermark
 from tinyerp_etl_spark.etl.watermark import (
     WatermarkStore,
     max_business_timestamp,
@@ -105,6 +109,35 @@ def test_failed_commit_leaves_previous_watermarks(spark, tmp_path, monkeypatch):
     assert store.get("produtos") == NOW
     assert store.get("pedidos") is None
     assert os.listdir(tmp_path) == ["wm"]  # no temp file left behind
+
+
+def test_concurrent_commits_keep_every_process_row(spark, tmp_path, monkeypatch):
+    """Threads committing different processes on one instance (concurrent
+    sync steps): a commit reads and replaces the whole document, so
+    without the instance's lock a thread would write back a document
+    missing another's watermark. The read sleeps to make the threads
+    overlap."""
+    store = WatermarkStore(spark, str(tmp_path / "wm"))
+    read_json = watermark.read_json
+
+    def slow_read(path):
+        got = read_json(path)
+        time.sleep(0.02)
+        return got
+
+    monkeypatch.setattr(watermark, "read_json", slow_read)
+    processes = {f"entity_{i}": NOW + timedelta(minutes=i) for i in range(8)}
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(len(processes)) as pool:
+            futs = [pool.submit(store.commit, p, ts) for p, ts in processes.items()]
+            for fut in futs:
+                fut.result(timeout=60)
+    finally:
+        sys.setswitchinterval(switch)
+    monkeypatch.undo()
+    assert {p: store.get(p) for p in processes} == processes
 
 
 def test_old_parquet_store_dir_fails_loud(spark, tmp_path):

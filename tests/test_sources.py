@@ -301,6 +301,12 @@ def test_fetch_4xx_hard_fails():
         fetch_page(_transport_seq([(404, {})]), "u", {}, sleep=_no_sleep)
 
 
+@pytest.mark.parametrize("body", [None, [1], "x"], ids=["null", "list", "string"])
+def test_fetch_non_object_body_is_a_fetch_error(body):
+    with pytest.raises(FetchError, match="not a JSON object"):
+        fetch_page(_transport_seq([(200, body)]), "u", {}, sleep=_no_sleep)
+
+
 def test_fetch_error_code_35_forces_retry():
     bad = {"retorno": {"status": "Erro", "codigo_erro": "35"}}
     good = {"retorno": {"status": "OK"}}

@@ -14,12 +14,16 @@ and its three operations:
 In the Structured Streaming mirror this is exactly the checkpoint
 offset log; in batch mode it is one local JSON document (process
 → progress row), replaced atomically on every update — control state,
-not data, so no Spark job runs here.
+not data, so no Spark job runs here. An update reads the whole document
+and replaces it, so each instance serializes its updates under a lock
+(concurrent sync steps share one instance); reads take no lock, as the
+file is only ever replaced whole.
 """
 
 from __future__ import annotations
 
 import json
+import threading
 from dataclasses import dataclass
 from datetime import datetime, timezone
 
@@ -51,6 +55,7 @@ class PageCheckpoint:
 
     def __init__(self, spark: SparkSession, path: str):
         self.path = path
+        self._lock = threading.Lock()  # held from an update's load to its write
 
     # -- storage ------------------------------------------------------
 
@@ -83,45 +88,48 @@ class PageCheckpoint:
         Returns the page to start from: ``saved + 1`` when resuming an
         interrupted run with the same filter date, else 1.
         """
-        rows = self._load()
-        prev = rows.get(process)
-        if (
-            prev is not None
-            and prev["data_filtro_api"] == filter_date
-            and prev["status_execucao"] in (STATUS_RUNNING, STATUS_ERROR)
-        ):
-            start_page = prev["pagina_atual"] + 1
-            self._upsert(rows, process, status_execucao=STATUS_RUNNING)
-            return start_page
-        self._upsert(
-            rows,
-            process,
-            data_filtro_api=filter_date,
-            pagina_atual=0,
-            total_paginas=0,
-            registros_processados=0,
-            timestamp_inicio=datetime.now(timezone.utc).isoformat(),
-            status_execucao=STATUS_RUNNING,
-        )
-        return 1
+        with self._lock:
+            rows = self._load()
+            prev = rows.get(process)
+            if (
+                prev is not None
+                and prev["data_filtro_api"] == filter_date
+                and prev["status_execucao"] in (STATUS_RUNNING, STATUS_ERROR)
+            ):
+                start_page = prev["pagina_atual"] + 1
+                self._upsert(rows, process, status_execucao=STATUS_RUNNING)
+                return start_page
+            self._upsert(
+                rows,
+                process,
+                data_filtro_api=filter_date,
+                pagina_atual=0,
+                total_paginas=0,
+                registros_processados=0,
+                timestamp_inicio=datetime.now(timezone.utc).isoformat(),
+                status_execucao=STATUS_RUNNING,
+            )
+            return 1
 
     def advance(self, process: str, page: int, total_pages: int, n_records: int) -> None:
         """Commit one page (ref :205-215): running-counter accumulation."""
-        rows = self._load()
-        prev = rows.get(process)
-        done = (prev["registros_processados"] if prev else 0) + n_records
-        self._upsert(
-            rows,
-            process,
-            pagina_atual=page,
-            total_paginas=total_pages,
-            registros_processados=done,
-            status_execucao=STATUS_RUNNING,
-        )
+        with self._lock:
+            rows = self._load()
+            prev = rows.get(process)
+            done = (prev["registros_processados"] if prev else 0) + n_records
+            self._upsert(
+                rows,
+                process,
+                pagina_atual=page,
+                total_paginas=total_pages,
+                registros_processados=done,
+                status_execucao=STATUS_RUNNING,
+            )
 
     def finish(self, process: str, status: str) -> None:
         """Terminal status: CONCLUIDO / ERRO / EM_ANDAMENTO (page cap)."""
-        self._upsert(self._load(), process, status_execucao=status)
+        with self._lock:
+            self._upsert(self._load(), process, status_execucao=status)
 
     def progress(self, process: str) -> Progress | None:
         r = self._load().get(process)

@@ -19,16 +19,19 @@ Watermarks are per-process scalars — control state, not data — so the
 resolution logic is driver-side Python on purpose; only the synthetic
 bootstrap's MAX runs distributed. The store is one JSON document
 (process → ISO-8601 UTC timestamp), replaced atomically on every
-commit, so reading or committing a watermark runs no Spark job. Commit
-semantics mirror the reference: the committed timestamp is the
-*step start time* (ref :326, :363) so in-flight changes are re-read
-next run — at-least-once, made exactly-once-effective by the
-idempotent MERGE sink (etl.merge).
+commit, so reading or committing a watermark runs no Spark job. A
+commit reads and replaces the whole document under the store's lock,
+so concurrent sync steps sharing one store keep each other's rows;
+reads take no lock. Commit semantics mirror the reference: the
+committed timestamp is the *step start time* (ref :326, :363) so
+in-flight changes are re-read next run — at-least-once, made
+exactly-once-effective by the idempotent MERGE sink (etl.merge).
 """
 
 from __future__ import annotations
 
 import json
+import threading
 from datetime import datetime, timedelta, timezone
 
 from pyspark.sql import DataFrame, SparkSession
@@ -47,6 +50,7 @@ class WatermarkStore:
 
     def __init__(self, spark: SparkSession, path: str):
         self.path = path
+        self._lock = threading.Lock()  # held from a commit's load to its write
 
     def get(self, process: str) -> datetime | None:
         ts = (read_json(self.path) or {}).get(process)
@@ -54,9 +58,10 @@ class WatermarkStore:
 
     def commit(self, process: str, ts: datetime) -> None:
         """Upsert (process, ts) — the ON CONFLICT DO UPDATE at ref :122-123."""
-        rows = read_json(self.path) or {}
-        rows[process] = ts.astimezone(timezone.utc).isoformat()
-        write_atomic(self.path, json.dumps(rows, sort_keys=True))
+        with self._lock:
+            rows = read_json(self.path) or {}
+            rows[process] = ts.astimezone(timezone.utc).isoformat()
+            write_atomic(self.path, json.dumps(rows, sort_keys=True))
 
 
 def resolve_filter_timestamp(

@@ -86,6 +86,8 @@ def fetch_page(
             sleep(next(delays))
             continue
 
+        if not isinstance(body, dict):
+            raise FetchError(f"HTTP {status} body is not a JSON object: {body!r:.80}")
         retorno = body.get("retorno")
         if isinstance(retorno, dict) and retorno.get("status") != "OK":
             code = str(retorno.get("codigo_erro", ""))
