@@ -10,7 +10,6 @@ from __future__ import annotations
 import json
 import os
 import threading
-import time
 from datetime import datetime, timedelta, timezone
 
 import pytest
@@ -377,33 +376,6 @@ def test_pipeline_runs_steps_concurrently(spark, tmp_path):
     assert (wm.get("a"), wm.get("b")) == (NOW, NOW)
 
 
-@pytest.mark.parametrize("a_fails", [False, True], ids=["a_done", "a_error"])
-def test_after_step_reads_the_store_its_dependency_left(spark, tmp_path, a_fails):
-    """``b`` copies ``a``'s store: it starts once ``a`` returned, so it
-    reads ``a``'s new version (``a`` is slow, so an unordered ``b``
-    would read the old one); ``a``'s failure does not stop ``b``."""
-    a = TableStore(spark, str(tmp_path / "a"), KV)
-    a.commit(spark.createDataFrame(EXISTING, KV))
-    b = TableStore(spark, str(tmp_path / "b"), KV)
-
-    def slow_a():
-        time.sleep(1)
-        if a_fails:
-            raise RuntimeError("a down")
-
-    syncs = [_kv_sync(spark, "a", a, [(7, 70, 1)], slow_a),
-             EntitySync(name="b", source=lambda _ts, _page: (a.read(), 1), store=b,
-                        keys=["k"], after=("a",))]
-    wm, cp = _control(spark, tmp_path)
-    results = run_pipeline(spark, syncs, wm, cp, now=NOW)
-    if a_fails:
-        assert [r.status for r in results] == [STATUS_ERROR, STATUS_DONE]
-        assert _kv_rows(b.read()) == EXISTING
-    else:
-        assert [r.status for r in results] == [STATUS_DONE, STATUS_DONE]
-        assert _kv_rows(b.read()) == sorted(EXISTING + [(7, 70, 1)])
-
-
 def test_caller_job_group_holds_every_pipeline_job(spark, tmp_path):
     """The steps' threads inherit the caller's job group: every job
     started between two marker jobs is in it."""
@@ -432,24 +404,20 @@ def test_caller_job_group_holds_every_pipeline_job(spark, tmp_path):
 
 
 def _empty_steps(spark, tmp_path, steps, calls):
-    """(name, store dir, after) steps whose source records a call and
-    serves no page."""
+    """(name, store dir) steps whose source records a call and serves
+    no page."""
     def source(_ts, _page):
         calls.append(1)
         return None, 0
 
     return [EntitySync(name=name, source=source, store=TableStore(spark, str(tmp_path / path), KV),
-                       keys=["k"], after=after) for name, path, after in steps]
+                       keys=["k"]) for name, path in steps]
 
 
 @pytest.mark.parametrize("steps, match", [
-    ([("a", "s1", ()), ("a", "s2", ())], "two sync steps are named 'a'"),
-    ([("a", "s1", ()), ("b", "s2", ("zzz",))], "'zzz', which is not an earlier step"),
-    ([("a", "s1", ("a",))], "'a', which is not an earlier step"),
-    ([("a", "s1", ("b",)), ("b", "s2", ("a",))], "'b', which is not an earlier step"),
-    ([("a", "s1", ()), ("m", "s2", ()), ("b", "s1", ("m",))],
-     "'a' and 'b' both write .*s1 but 'b' is not ordered after 'a'"),
-], ids=["duplicate_name", "unknown_after", "self_after", "cycle", "unordered_writers"])
+    ([("a", "s1"), ("a", "s2")], "two sync steps are named 'a'"),
+    ([("a", "s1"), ("m", "s2"), ("b", "s1")], "'a' and 'b' both write .*s1"),
+], ids=["duplicate_name", "shared_store"])
 def test_pipeline_contract_violation_runs_no_step(spark, tmp_path, steps, match):
     calls = []
     wm, cp = _control(spark, tmp_path)
@@ -457,17 +425,6 @@ def test_pipeline_contract_violation_runs_no_step(spark, tmp_path, steps, match)
         run_pipeline(spark, _empty_steps(spark, tmp_path, steps, calls), wm, cp, now=NOW)
     assert calls == []
     assert not (tmp_path / "cp").exists() and not (tmp_path / "wm").exists()
-
-
-def test_writers_of_one_store_ordered_through_a_chain_run(spark, tmp_path):
-    """``b`` writes ``a``'s store and is ordered after it through ``m``."""
-    calls = []
-    steps = [("a", "s1", ()), ("m", "s2", ("a",)), ("b", "s1", ("m",))]
-    wm, cp = _control(spark, tmp_path)
-    results = run_pipeline(spark, _empty_steps(spark, tmp_path, steps, calls), wm, cp, now=NOW)
-    assert [(r.name, r.status) for r in results] == [
-        ("a", STATUS_DONE), ("m", STATUS_DONE), ("b", STATUS_DONE)]
-    assert len(calls) == 3
 
 
 def test_schema_evolution_add_column(spark, sf_dir, tmp_path):

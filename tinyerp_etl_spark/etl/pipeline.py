@@ -23,9 +23,9 @@ Re-expresses ``executar_etapa_paginada`` (ref tiny_api_v2_cliente.py:
 - ``run_pipeline`` runs the steps concurrently, one thread per step:
   a step's fixed driver costs (planning, AQE re-plans, the commit's
   file moves) overlap its siblings' jobs. The reference's step order
-  (Categorias → Produtos → Estoques) survives only where it is a data
-  dependency, declared as ``EntitySync.after``: a step whose source or
-  transform reads another step's store starts once that step returned.
+  (Categorias → Produtos → Estoques) matters only where a step reads
+  another's store; such a step goes in a later ``run_pipeline`` call,
+  which starts once every step of the earlier call has returned.
 """
 
 from __future__ import annotations
@@ -33,7 +33,7 @@ from __future__ import annotations
 import logging
 import os
 from collections.abc import Callable, Sequence
-from concurrent.futures import Future, ThreadPoolExecutor, wait
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
 
@@ -78,9 +78,6 @@ class EntitySync:
     max_pages: int = MAX_PAGES_PER_STEP_DEFAULT
     # MAX(business ts) provider for the synthetic-bootstrap branch
     max_business_ts: Callable[[DataFrame], datetime | None] | None = None
-    # names of earlier steps whose committed store this step's source or
-    # transform reads: it starts once each of them returned (any status)
-    after: Sequence[str] = ()
 
 
 @dataclass
@@ -179,33 +176,23 @@ def run_entity_sync(
         )
 
 
-def _check_dag(syncs: Sequence[EntitySync]) -> None:
+def _check_steps(syncs: Sequence[EntitySync]) -> None:
     """Raise ValueError unless the steps can run concurrently: unique
-    names (they key checkpoint and watermark rows), ``after`` naming
-    only earlier steps (so no cycle), and steps writing one store
-    ordered by ``after`` (concurrent MERGEs would fail each other's
-    optimistic-concurrency check)."""
-    ancestors: dict[str, set[str]] = {}
-    writers: dict[str, list[str]] = {}
+    names (they key checkpoint and watermark rows) and one step per
+    store (concurrent MERGEs would fail each other's optimistic-
+    concurrency check)."""
+    names: set[str] = set()
+    writers: dict[str, str] = {}
     for cfg in syncs:
-        if cfg.name in ancestors:
+        if cfg.name in names:
             raise ValueError(f"two sync steps are named {cfg.name!r}")
-        deps: set[str] = set()
-        for dep in cfg.after:
-            if dep not in ancestors:
-                raise ValueError(
-                    f"step {cfg.name!r} runs after {dep!r}, which is not an earlier step"
-                )
-            deps |= {dep} | ancestors[dep]
-        ancestors[cfg.name] = deps
+        names.add(cfg.name)
         path = os.path.abspath(cfg.store.path)
-        for other in writers.get(path, ()):
-            if other not in deps:
-                raise ValueError(
-                    f"steps {other!r} and {cfg.name!r} both write {path} "
-                    f"but {cfg.name!r} is not ordered after {other!r}"
-                )
-        writers.setdefault(path, []).append(cfg.name)
+        if path in writers:
+            raise ValueError(
+                f"steps {writers[path]!r} and {cfg.name!r} both write {path}"
+            )
+        writers[path] = cfg.name
 
 
 def run_pipeline(
@@ -215,36 +202,31 @@ def run_pipeline(
     checkpoints: PageCheckpoint,
     now: datetime | None = None,
 ) -> list[SyncResult]:
-    """The main DAG (ref :324-393): every step in its own thread, each
-    started once the steps its ``after`` names have returned; steps fail
-    independently. Results come back in ``syncs`` order.
+    """The main DAG (ref :324-393): every step in its own thread; steps
+    fail independently. Results come back in ``syncs`` order.
 
     Each thread inherits the caller's Spark local properties (job group,
     description) and tags, so they cover every job a step runs. Sources
     of different steps run at the same time; the shared ``watermarks``
     and ``checkpoints`` serialize their own updates. The steps are
-    checked first (``ValueError`` before any step runs): unique names,
-    ``after`` naming earlier steps only, and no two unordered steps
-    writing one store.
+    checked first (``ValueError`` before any step runs): unique names
+    and no two steps writing one store. A step whose source or
+    transform reads another step's store goes in a later call, so it
+    sees that step's commit whatever the timing.
 
     Ends with the audit: per-table row counts (ref :395-401) are left
     to the caller via ``TableStore.read().count()``.
     """
-    _check_dag(syncs)
+    _check_steps(syncs)
     if not syncs:
         return []
 
-    def step(cfg: EntitySync, deps: list[Future]) -> SyncResult:
-        wait(deps)
+    def step(cfg: EntitySync) -> SyncResult:
         return run_entity_sync(spark, cfg, watermarks, checkpoints, now=now)
 
-    futures: dict[str, Future] = {}
-    # one thread per step: a step waiting on ``after`` holds its own thread
     with ThreadPoolExecutor(len(syncs), thread_name_prefix="entity-sync") as pool:
-        for cfg in syncs:
-            deps = [futures[d] for d in cfg.after]
-            # wrapped per step: each thread gets its own copy of the
-            # caller's local properties, so one step's job-group change
-            # cannot leak into another's
-            futures[cfg.name] = pool.submit(inheritable_thread_target(spark)(step), cfg, deps)
-    return [futures[cfg.name].result() for cfg in syncs]
+        # wrapped per step: each thread gets its own copy of the caller's
+        # local properties, so one step's job-group change cannot leak
+        # into another's
+        futures = [pool.submit(inheritable_thread_target(spark)(step), cfg) for cfg in syncs]
+    return [f.result() for f in futures]
