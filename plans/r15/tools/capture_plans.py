@@ -1,7 +1,7 @@
 """Capture .explain("formatted") for registered queries -> text files.
 
 Usage:
-  python plans/r14/tools/capture_plans.py <out_suffix> [name ...]
+  python plans/r15/tools/capture_plans.py <out_suffix> [name ...]
 
 Writes plans/r14/<query>_<out_suffix>.txt for each named query (all
 registered queries when no names are given). Plans are captured at

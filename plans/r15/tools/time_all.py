@@ -1,6 +1,6 @@
 """Time every registered query with the noop sink at $SPARK_GRAFT_SF_DIR.
 
-Usage: python plans/r14/tools/time_all.py <out.json> [passes] [name ...]
+Usage: python plans/r15/tools/time_all.py <out.json> [passes] [name ...]
 
 One warm-up of the Arrow worker pool, then `passes` noop-sink passes
 per query (min reported). Queries are labelled via setJobDescription.

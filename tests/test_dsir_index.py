@@ -120,7 +120,7 @@ def test_sub_gram_batches_are_noops(spark, tmp_path):
     empty = _docs(spark, [(1, ""), (2, "")])
     # absent store: no spurious empty artifact
     assert update_dsir_model(spark, path, empty) == 0
-    assert dsir_model_store(spark, path).current_version() is None
+    assert dsir_model_store(spark, path).current_version() == 0
     v = update_dsir_model(spark, path, _docs(spark, _POOL))
     # existing store: version preserved (doc_ids 1,2 predate the max,
     # but hold no grams — invisible to the model, not an order breach)

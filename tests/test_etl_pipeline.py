@@ -568,7 +568,7 @@ def test_optimistic_concurrency_two_writer_race(spark, sf_dir, tmp_path):
     assert writer_b.commit(df_b2, n_files=1, expected_version=2) == 3
     assert store.read().count() == 20
 
-    # None preserves unconditional last-writer-wins for single-writer use
+    # None commits against the version on disk when the commit starts
     assert store.commit(store.read(), n_files=1) == 4
 
 
@@ -597,8 +597,8 @@ def test_optimistic_concurrency_rejects_stale_fast(spark, sf_dir, tmp_path):
 def test_commit_never_clobbers_claimed_version_dir(spark, sf_dir, tmp_path):
     """The rename-claim protocol: a version directory that already
     exists (a concurrent winner mid-commit) can never be overwritten
-    or deleted by a racing writer — OCC raises, legacy takes the next
-    free version; the claimed dir's contents survive both."""
+    or deleted by a racing writer — a stale commit raises, a bare one
+    commits on top of it; the claimed dir's contents survive both."""
     import os
 
     import pytest as _pytest
@@ -627,7 +627,7 @@ def test_commit_never_clobbers_claimed_version_dir(spark, sf_dir, tmp_path):
         store.commit(ev, n_files=1, expected_version=1)
     assert open(marker).read() == "winner bytes"
 
-    # legacy path (no expected_version): takes the NEXT free version,
+    # no expected_version: commits against the rolled-forward v2,
     # still never touching the claimed dir
     v = store.commit(ev, n_files=1)
     assert v == 3
@@ -663,6 +663,12 @@ def test_occ_rename_is_sole_arbiter(spark, sf_dir, tmp_path):
     # the winner's commit is intact — nothing claimed past it
     assert store.current_version() == 2
     assert store.read().count() == 5
+    # a bare commit is computed from the version it sees (v1) and
+    # loses the same rename: it never takes the next free version
+    with _pytest.raises(ConcurrentWriteError, match="claimed"):
+        racer.commit(ev, n_files=1)
+    assert store.current_version() == 2
+    assert store.read().count() == 5
 
 
 def test_crashed_writer_orphan_rolls_forward(spark, sf_dir, tmp_path):
@@ -696,20 +702,35 @@ def test_crashed_writer_orphan_rolls_forward(spark, sf_dir, tmp_path):
 
 
 def test_occ_armed_for_first_batch_into_fresh_store(spark, sf_dir, tmp_path):
-    """expected_version=0 on an empty table means 'expected empty':
-    a concurrent first commit must fail the check (the fresh-store
-    hole the sink's `or 0` closes)."""
+    """An empty table is version 0: it does not exist, has no data
+    files, and reads as an empty frame in its (evolved) schema. The
+    version a writer reads from a fresh store, passed straight
+    through, keeps the check armed — a concurrent first commit must
+    fail it."""
     import pytest as _pytest
     from pyspark.sql import functions as F
 
     from tinyerp_etl_spark.etl.table_store import ConcurrentWriteError, TableStore
     from tinyerp_etl_spark.sources.catalog import TABLES, load_table
 
+    empty = TableStore(spark, str(tmp_path / "empty"), TABLES["events"])
+    empty.add_column("ingest_note", "string")
+    assert empty.current_version() == 0
+    assert not empty.exists()
+    assert empty.data_file_count() == 0
+    v0 = empty.read_version(0)
+    assert v0.schema == empty.schema
+    assert v0.schema.fieldNames()[-1] == "ingest_note"
+    assert v0.count() == 0
+
     ev = load_table(spark, sf_dir, "events").filter(F.col("event_id") < 10)
     store = TableStore(spark, str(tmp_path / "t"), TABLES["events"])
-    assert store.commit(ev, n_files=1, expected_version=0) == 1  # empty as expected
+    base = store.current_version()
+    assert store.commit(ev, n_files=1, expected_version=base) == 1  # empty as read
 
     store2 = TableStore(spark, str(tmp_path / "t2"), TABLES["events"])
+    base2 = store2.current_version()
     store2.commit(ev, n_files=1)  # concurrent writer lands first
     with _pytest.raises(ConcurrentWriteError):
-        store2.commit(ev, n_files=1, expected_version=0)
+        store2.commit(ev, n_files=1, expected_version=base2)
+    assert store2.current_version() == 1

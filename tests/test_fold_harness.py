@@ -59,7 +59,7 @@ def test_fold_append_skeleton_contracts(spark, tmp_path):
     # empty bootstrap with skip result: no artifact created
     empty = rows().limit(0)
     assert fold_append(store, empty, anti, skip_empty_bootstrap_result=0) == 0
-    assert store.current_version() is None
+    assert store.current_version() == 0
     # bootstrap commits under OCC
     v1 = fold_append(store, rows((1, "a"), (2, "b")), anti)
     assert v1 == 1

@@ -216,7 +216,7 @@ def test_fold_sequence_equals_one_shot_build(spark, texts, assign):
                 == v
             )
         expected = _rows(M.build_minhash_features(_docs(spark, docs)))
-        if store.current_version() is None:
+        if store.current_version() == 0:
             assert expected == []  # nothing was ever indexable
         else:
             assert _rows(store.read()) == expected
@@ -229,7 +229,7 @@ def test_empty_bootstrap_creates_nothing(spark, tmp_path):
     path = str(tmp_path / "mh")
     v = M.update_minhash_index(spark, path, _docs(spark, [(1, "hi there")]))
     assert v == 0
-    assert M.minhash_feature_store(spark, path).current_version() is None
+    assert M.minhash_feature_store(spark, path).current_version() == 0
 
 
 def test_stream_fold_equals_batch_build(spark, tmp_path):

@@ -90,7 +90,7 @@ def test_replay_contract(spark, tmp_path):
 def test_sub_k_batch_is_noop(spark, tmp_path):
     path = str(tmp_path / "span")
     assert SI.update_span_index(spark, path, _docs(spark, [(1, "too short")])) == 0
-    assert SI.span_gram_store(spark, path).current_version() is None
+    assert SI.span_gram_store(spark, path).current_version() == 0
 
 
 def test_clean_plan_is_store_shuffle_free(spark, tmp_path):

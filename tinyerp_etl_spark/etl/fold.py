@@ -19,10 +19,12 @@ copy (the sixth and seventh stores are pure instances):
   give up loudly after ``occ_retries``.
 - ``drain_available_now``: the foreachBatch + availableNow +
   awaitTermination drain every streaming fold shares.
+- ``compact_and_vacuum``: the threshold-gated compaction and
+  retention tail of every compacting fold.
 
 Contracts preserved from the originals (their tests run unchanged
-against this path): bootstrap commits carry ``expected_version=0`` so
-two racing creators never last-writer-win; the store read is pinned
+against this path): every commit carries the claimed version, so two
+racing creators or folders never both land; the store read is pinned
 to the claimed version (``read_version``) so a concurrent fold landing
 mid-read cannot split the probe from the commit; a fold that appends
 nothing preserves the version; fold compute and IO are both ∝ batch
@@ -118,15 +120,14 @@ def fold_append(
     compact_max_files: int | None = None,
     compact_n_files: int | None = None,
     vacuum_retain: int | None = None,
-) -> int | None:
+) -> int:
     """The append-only fold skeleton shared by the single-artifact
     feature stores.
 
     1. CLAIM: ``current_version()`` once, up front.
-    2. BOOTSTRAP: an absent store commits the whole batch with
-       ``expected_version=0`` — "the store was empty when I looked" —
-       so two racing creators raise for the loser instead of the
-       second v1 silently shadowing the first writer's rows. When
+    2. BOOTSTRAP: an empty store (version 0) commits the whole
+       batch against version 0, so two racing creators raise for the
+       loser instead of the second v1 shadowing the first. When
        ``skip_empty_bootstrap_result`` is set and the batch is empty,
        no spurious empty artifact is created and that value returns
        (the MinHash contract: an all-too-short batch leaves nothing);
@@ -188,7 +189,7 @@ def fold_append(
        to keep.
     """
     version = store.current_version()
-    if version is None:
+    if version == 0:
         if (
             skip_empty_bootstrap_result is not None
             and batch_rows.limit(1).isEmpty()
@@ -198,7 +199,7 @@ def fold_append(
             batch_rows,
             n_files=n_files,
             cluster_by=cluster_by,
-            expected_version=0,
+            expected_version=version,
         )
     stored = store.read_version(version)
     fresh = fresh_rows(stored, batch_rows)
@@ -215,24 +216,37 @@ def fold_append(
         expected_version=version,
     )
     if compact_max_files is not None:
-        try:
-            compacted = store.maybe_compact(
-                max_files=compact_max_files,
-                n_files=(
-                    compact_n_files
-                    if compact_n_files is not None
-                    else (n_files or 1)
-                ),
-                cluster_by=cluster_by,
-            )
-        except ConcurrentWriteError:
-            # a racing fold claimed the version between our append and
-            # the rewrite — the fold LANDED, only maintenance lost;
-            # the winner's fold re-checks the (still exceeded)
-            # threshold, so compaction is delayed one fold, never lost
-            compacted = None
+        compacted = compact_and_vacuum(
+            store,
+            compact_max_files,
+            compact_n_files if compact_n_files is not None else (n_files or 1),
+            cluster_by,
+            vacuum_retain,
+        )
         if compacted is not None:
-            if vacuum_retain is not None:
-                store.vacuum(retain_last=vacuum_retain)
             return compacted
     return appended
+
+
+def compact_and_vacuum(
+    store: TableStore,
+    max_files: int,
+    n_files: int,
+    cluster_by: list[str] | None,
+    vacuum_retain: int | None,
+) -> int | None:
+    """A fold's maintenance tail (``fold_append`` steps 7-8, also run
+    by the BM25 fold): ``maybe_compact``, then
+    ``vacuum(retain_last=vacuum_retain)`` only when a compaction ran.
+    Returns the compacted version, or None when the store is under
+    the threshold or a racing writer won the compaction (the fold
+    itself already landed; compaction is delayed one fold)."""
+    try:
+        compacted = store.maybe_compact(
+            max_files=max_files, n_files=n_files, cluster_by=cluster_by
+        )
+    except ConcurrentWriteError:
+        return None
+    if compacted is not None and vacuum_retain is not None:
+        store.vacuum(retain_last=vacuum_retain)
+    return compacted

@@ -145,16 +145,15 @@ def run_entity_sync(
             if page_df is not None:
                 rows = Observation()
                 page_df = page_df.observe(rows, F.count(F.lit(1)).alias("n"))
-                # pinned before the read: the commit raises
-                # ConcurrentWriteError if any writer landed after ``base``;
-                # ``or 0`` keeps that check armed for a store with no version
+                # the MERGE reads the version the commit pins: it raises
+                # ConcurrentWriteError if any writer landed after ``base``
                 base = cfg.store.current_version()
                 merged = merge_upsert(
-                    cfg.store.read(), page_df, cfg.keys, cfg.order_by
+                    cfg.store.read_version(base), page_df, cfg.keys, cfg.order_by
                 )
                 # the commit's write is the first action on ``merged``:
                 # the only one an Observation reports
-                cfg.store.commit(merged, expected_version=base or 0)
+                cfg.store.commit(merged, expected_version=base)
                 n = _observed_rows(rows)
             checkpoints.advance(cfg.name, page, total_pages, n)
             pages_done += 1

@@ -61,8 +61,8 @@ def read_json(path: str):
 class ConcurrentWriteError(RuntimeError):
     """Another writer committed between this writer's read and commit.
 
-    The optimistic-concurrency conflict signal (commit with
-    ``expected_version``): the caller should re-read the table,
+    The optimistic-concurrency conflict signal every commit can
+    raise: the caller should re-read the table,
     recompute its write against the new current version, and retry —
     the transaction-retry loop the reference gets from PostgreSQL
     (ref tiny_api_v2_cliente.py:404-413) expressed over immutable
@@ -131,8 +131,9 @@ class TableStore:
         self._save_schema()
         return True
 
-    def current_version(self) -> int | None:
-        """Newest committed version: max(pointer, newest version dir).
+    def current_version(self) -> int:
+        """Newest committed version: max(pointer, newest version dir);
+        0 when nothing is committed (version 0 is the empty table).
 
         The version-directory RENAME is the commit record — a renamed
         dir always holds a complete write (staging is renamed only
@@ -140,34 +141,25 @@ class TableStore:
         rename and the pointer swap rolls FORWARD: the next reader or
         writer sees the renamed version as current and the pointer
         heals on the next commit. Without this, an orphaned claimed
-        dir would make every subsequent OCC commit fail its rename
+        dir would make every subsequent commit fail its rename
         forever (the pointer never advancing past the orphan).
         """
-        ptr = None
+        ptr = 0
         try:
             with open(self._pointer) as f:
                 ptr = int(f.read().strip())
         except (FileNotFoundError, ValueError):
             pass
-        vs = self.versions()
-        disk = vs[-1] if vs else None
-        if ptr is None:
-            return disk
-        if disk is None:
-            return ptr
-        return max(ptr, disk)
+        return max([ptr, *self.versions()[-1:]])
 
     def _version_dir(self, v: int) -> str:
         return os.path.join(self.path, f"v{v:06d}")
 
     def exists(self) -> bool:
-        return self.current_version() is not None
+        return self.current_version() > 0
 
     def read(self) -> DataFrame:
-        v = self.current_version()
-        if v is None:
-            return self.spark.createDataFrame([], self.schema)
-        return self.read_version(v)
+        return self.read_version(self.current_version())
 
     def read_version(self, version: int) -> DataFrame:
         """Time-travel read of a committed version.
@@ -175,9 +167,11 @@ class TableStore:
         Old version directories are immutable (commit never rewrites
         them), so any retained version stays readable — the input to
         merge.snapshot_diff CDC recovery and to reproducing what a
-        query saw at an earlier run. Raises if the version was never
-        committed.
+        query saw at an earlier run. Version 0 is the empty table in
+        the current schema. Raises if the version was never committed.
         """
+        if version == 0:
+            return self.spark.createDataFrame([], self.schema)
         d = self._version_dir(version)
         if not os.path.isdir(d):
             raise ValueError(f"version {version} does not exist at {self.path}")
@@ -200,26 +194,20 @@ class TableStore:
     ) -> int:
         """Write ``df`` as the next version and swap the pointer.
 
-        ``expected_version`` enables optimistic concurrency, the same
-        check-before-swing Delta's commit protocol makes: pass the
-        version the write was COMPUTED FROM (``current_version()`` at
-        read time) and the commit fails with ConcurrentWriteError if
-        another writer advanced the pointer in between — instead of
-        silently last-winning and losing that writer's rows. At 100 TB
-        with a nightly pipeline plus ad-hoc backfills this is the
-        difference between a retry and a quiet data loss.
+        Every commit is optimistic, the check-before-swing Delta's
+        commit protocol makes: ``expected_version`` is the version the
+        write was COMPUTED FROM (``current_version()`` at read time; 0
+        for an empty table, None for "the version on disk when this
+        commit starts"), and the commit fails with ConcurrentWriteError
+        if another writer advanced the table since — instead of
+        silently losing that writer's rows.
 
         The write NEVER touches the shared version directory directly:
         data lands in a private staging dir (unique per attempt), and
-        the version number is claimed by an atomic directory rename —
-        two writers racing for the same version number cannot clobber
-        each other because exactly one rename onto ``v{N+1}`` can
-        succeed; the loser's rename fails and its staging dir is
-        discarded. With ``expected_version`` set the loser raises
-        ConcurrentWriteError (retry protocol); with ``None`` it claims
-        the NEXT free version instead — last-writer-wins ordering for
-        single-writer/legacy pipelines, still without ever deleting a
-        committed directory.
+        the version number is claimed by an atomic directory rename
+        onto ``v{expected+1}`` — exactly one of two racing writers can
+        win it; the loser raises ConcurrentWriteError and its staging
+        dir is discarded, so a committed directory is never touched.
 
         ``n_files`` coalesces the write to that many output files —
         the small-files control: a MERGE rewriting a table through 32
@@ -236,14 +224,20 @@ class TableStore:
         for the single-dimension case). Worth one extra shuffle when
         the table is read selectively many times per write.
         """
-        base = self.current_version()
-        if expected_version is not None and (base or 0) != expected_version:
+        base = self._check_base(expected_version)
+        return self._claim_version(self._stage_write(df, n_files, cluster_by), base)
+
+    def _check_base(self, expected_version: int | None) -> int:
+        """The version a commit is computed from: ``expected_version``,
+        or the current one when None. Raises ConcurrentWriteError when
+        the table is no longer at it."""
+        now = self.current_version()
+        if expected_version is not None and now != expected_version:
             raise ConcurrentWriteError(
-                f"table at {self.path} advanced to v{base} since "
+                f"table at {self.path} advanced to v{now} since "
                 f"v{expected_version} was read; recompute and retry"
             )
-        staging = self._stage_write(df, n_files, cluster_by)
-        return self._claim_version(staging, expected_version)
+        return now
 
     def _stage_write(
         self,
@@ -279,59 +273,33 @@ class TableStore:
             raise
         return staging
 
-    def _claim_version(self, staging: str, expected_version: int | None) -> int:
+    def _claim_version(self, staging: str, base: int) -> int:
         """Post-write recheck + atomic version claim + pointer swap —
         the commit protocol's tail, shared by commit()/commit_append().
+
+        The recheck fails a commit that landed during the (slow) data
+        write. The claim is one rename onto the PINNED ``v{base+1}``:
+        only one rename onto a given version dir can succeed (the
+        target existing, and non-empty, fails it), so a commit landing
+        between the recheck and the rename makes this one raise
+        instead of clobbering or orphaning the winner's rows.
         """
-        if expected_version is not None:
-            # re-check after the (slow) data write: a concurrent commit
-            # that landed while this version was being written must fail
-            # here, not lose the race at the claim below
-            now = self.current_version()
-            if (now or 0) != expected_version:
-                shutil.rmtree(staging, ignore_errors=True)
+        out = self._version_dir(base + 1)
+        try:
+            self._check_base(base)
+            os.rename(staging, out)
+        except BaseException as e:
+            shutil.rmtree(staging, ignore_errors=True)
+            if isinstance(e, OSError) and e.errno in (errno.EEXIST, errno.ENOTEMPTY):
                 raise ConcurrentWriteError(
-                    f"table at {self.path} advanced to v{now} during the "
-                    f"write (read at v{expected_version}); recompute and retry"
-                )
-        # claim the version number by atomic directory rename: only ONE
-        # rename onto a given v{N} can succeed (the target existing —
-        # and non-empty — fails the rename), so committed dirs are
-        # never clobbered no matter how writers race. With
-        # expected_version the claimed number is PINNED to expected+1
-        # (never re-read): the rename onto v{expected+1} is the sole
-        # arbiter, so a concurrent commit landing between the recheck
-        # above and this rename loses the rename instead of silently
-        # claiming one version higher and overwriting the winner.
-        if expected_version is not None:
-            v = expected_version + 1
-        else:
-            v = (self.current_version() or 0) + 1
-        while True:
-            out = self._version_dir(v)
-            try:
-                os.rename(staging, out)
-                break
-            except OSError as e:
-                if not (
-                    isinstance(e, FileExistsError)
-                    or e.errno in (errno.EEXIST, errno.ENOTEMPTY)
-                ):
-                    # rename failed for a reason OTHER than the target
-                    # being claimed (EACCES, ENOSPC, EXDEV, ...): not a
-                    # concurrency event — surface it instead of looping
-                    shutil.rmtree(staging, ignore_errors=True)
-                    raise
-                if expected_version is not None:
-                    shutil.rmtree(staging, ignore_errors=True)
-                    raise ConcurrentWriteError(
-                        f"version v{v} at {self.path} was claimed by a "
-                        f"concurrent writer (read at v{expected_version}); "
-                        "recompute and retry"
-                    ) from None
-                v += 1  # legacy path: take the next free version
-        write_atomic(self._pointer, str(v))
-        return v
+                    f"version v{base + 1} at {self.path} was claimed by a "
+                    f"concurrent writer (read at v{base}); recompute and retry"
+                ) from None
+            # any other failure (ConcurrentWriteError from the recheck,
+            # EACCES, ENOSPC, EXDEV, ...) surfaces as is
+            raise
+        write_atomic(self._pointer, str(base + 1))
+        return base + 1
 
     def commit_append(
         self,
@@ -368,30 +336,15 @@ class TableStore:
         does not rewrite existing rows (the BM25/paragraph folds
         enforce this upstream); a replace needs ``commit()``.
         Requires an existing base version — bootstrap with commit().
-
-        Appends are ALWAYS optimistic: with ``expected_version=None``
-        the observed base is pinned as the expectation, so a
-        concurrent commit landing mid-write raises
-        ConcurrentWriteError instead of this append silently basing
-        on a stale version and dropping the other writer's rows.
-        (commit()'s last-writer-wins None mode is defensible — its
-        caller supplied the FULL table; an append's contract is
-        "current ∪ batch", where last-writer-wins is quiet data
-        loss.)
+        Optimistic like ``commit()``: an append is "base ∪ batch", so
+        a writer landing after ``base`` raises instead of losing rows.
         """
-        base = self.current_version()
-        if base is None:
+        base = self._check_base(expected_version)
+        if base == 0:
             raise ValueError(
                 f"commit_append at {self.path} requires an existing "
                 "base version; bootstrap with commit()"
             )
-        if expected_version is not None and base != expected_version:
-            raise ConcurrentWriteError(
-                f"table at {self.path} advanced to v{base} since "
-                f"v{expected_version} was read; recompute and retry"
-            )
-        if expected_version is None:
-            expected_version = base
         staging = self._stage_write(new_rows, n_files, cluster_by)
         # reference the base version's data files (AFTER the Spark
         # write — overwrite mode clears the target dir). Spark part
@@ -418,12 +371,11 @@ class TableStore:
                     os.link(src, dst)
                 except OSError:
                     shutil.copy2(src, dst)  # EXDEV / no-hardlink FS
-        return self._claim_version(staging, expected_version)
+        return self._claim_version(staging, base)
 
     def data_file_count(self, version: int | None = None) -> int:
         """Number of parquet data files in a version (small-files gauge)."""
         v = version if version is not None else self.current_version()
-        assert v is not None, "table has no versions"
         total = 0
         for root, _dirs, files in os.walk(self._version_dir(v)):
             total += sum(1 for f in files if f.endswith(".parquet"))
@@ -448,15 +400,14 @@ class TableStore:
         compacting a clustered table without it would silently destroy
         its data-skipping layout.
 
-        Runs under optimistic concurrency against the version it read:
-        compaction rewrites the whole table, so racing a concurrent
-        fold would otherwise drop the fold's rows from the new current
-        version — the one writer in the protocol that must never
-        last-writer-win. On ConcurrentWriteError simply retry; the
+        Commits against the version it read, like every commit: a
+        fold landing mid-rewrite raises ConcurrentWriteError instead
+        of being dropped from the new version. Simply retry; the
         fold's rows are then included in the re-read.
         """
         v = self.current_version()
-        assert v is not None, "table has no versions"
+        if v == 0:
+            raise ValueError(f"table at {self.path} has no versions")
         return self.commit(
             self.read_version(v),
             n_files=n_files,
@@ -485,7 +436,7 @@ class TableStore:
         raises ConcurrentWriteError (retry) rather than rewriting the
         table without the fold's rows.
         """
-        if self.current_version() is None or self.data_file_count() <= max_files:
+        if self.data_file_count() <= max_files:
             return None
         return self.compact(n_files=n_files, cluster_by=cluster_by)
 
@@ -510,10 +461,7 @@ class TableStore:
         if retain_last < 1:
             raise ValueError("retain_last must be >= 1")
         vs = self.versions()
-        current = self.current_version()
-        keep = set(vs[-retain_last:])
-        if current is not None:
-            keep.add(current)
+        keep = {*vs[-retain_last:], self.current_version()}
         deleted = []
         for v in vs:
             if v in keep:

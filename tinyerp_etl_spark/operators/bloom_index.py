@@ -60,8 +60,7 @@ def save_bloom_bitmap(
 ) -> int:
     """Persist a (word_idx, mask) bitmap as the next TableStore
     version, hyperparameters denormalized onto every row.
-    ``expected_version`` passes through to the OCC commit (0 =
-    'expect no version yet' — the atomic-bootstrap form)."""
+    ``expected_version`` passes through to the commit."""
     rows = bitmap.select(
         F.col("word_idx").cast("long"),
         F.col("mask").cast("long"),
@@ -73,11 +72,8 @@ def save_bloom_bitmap(
     )
 
 
-def _bitmap_rows(spark: SparkSession, path: str, version: int | None):
-    """Collected rows of the pinned bitmap version; None when the
-    store is absent (no version committed)."""
-    if version is None:
-        return None
+def _bitmap_rows(spark: SparkSession, path: str, version: int):
+    """Collected rows of the pinned bitmap version."""
     return bitmap_store(spark, path).read_version(version).collect()
 
 
@@ -146,7 +142,7 @@ def update_bloom_bitmap(
             batch,
             m_bits=m_bits,
             k=k,
-            expected_version=read_version or 0,
+            expected_version=read_version,
         )
     stored = local_df(
         spark,

@@ -37,7 +37,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from tinyerp_etl_spark.etl.table_store import ConcurrentWriteError, TableStore
+from tinyerp_etl_spark.etl.fold import compact_and_vacuum
+from tinyerp_etl_spark.etl.table_store import TableStore
 from tinyerp_etl_spark.operators.text import (
     BM25I_NORM_SCALE,
     BM25I_TF_CAP,
@@ -252,13 +253,10 @@ def save_bm25_index(
     batch.)
 
     The ``expected_*_version`` knobs pass through to the two commits
-    for callers that need the save itself under optimistic
-    concurrency — the update path's bootstrap passes (0, 0) so two
-    writers racing to CREATE the index raise for retry instead of the
-    second v1 silently shadowing the first writer's rows under
-    last-writer-wins; its torn-bootstrap repair pins the current
-    postings version the same way. A bare save (the explicit
-    full-rebuild entry) keeps the documented last-writer semantics.
+    (None: the version on disk when each commit starts). The update
+    path's bootstrap and torn-bootstrap repair pass the versions they
+    read, so two writers racing to CREATE the index raise for retry
+    instead of the second v1 shadowing the first writer's rows.
     """
     postings, _ = build_bm25_index(docs, text_col, id_col)
     n_docs, total_len, hsum = _stats_and_fp(docs, text_col, id_col)
@@ -356,32 +354,32 @@ def update_bm25_index(
     stats_store = TableStore(spark, f"{path}/stats", BM25_STATS_SCHEMA)
     postings_version = postings_store.current_version()
     stats_version = stats_store.current_version()
-    if postings_version is None and stats_version is None:
-        # bootstrap under OCC: "both stores were empty when I looked" —
-        # a racing creator makes the loser raise instead of its v1
-        # silently shadowing the winner's rows (the streaming face
-        # retries through this same path)
+    if postings_version == stats_version == 0:
+        # bootstrap against the empty versions read: a racing creator
+        # makes the loser raise instead of its v1 silently shadowing
+        # the winner's rows (the streaming face retries through this
+        # same path)
         return save_bm25_index(
             spark,
             path,
             new_docs,
             text_col,
             id_col,
-            expected_postings_version=0,
-            expected_stats_version=0,
+            expected_postings_version=postings_version,
+            expected_stats_version=stats_version,
         )
-    if stats_version is None or postings_version is None:
+    if stats_version == 0 or postings_version == 0:
         # torn index: exactly one artifact committed (a crash inside a
         # bootstrap save, or a vacuumed store). Rebuilding from the
         # batch alone would silently drop every previously indexed
         # doc. One sound repair: the batch is a REPLAY of the crashed
         # bootstrap (it covers all indexed ids) — rebuild from it.
-        if (
-            postings_version is not None
-            and on_overlap == "skip_existing"
-            and check_overlap
-        ):
-            indexed = postings_store.read().select("doc_id").distinct()
+        if postings_version > 0 and on_overlap == "skip_existing" and check_overlap:
+            indexed = (
+                postings_store.read_version(postings_version)
+                .select("doc_id")
+                .distinct()
+            )
             batch_ids = new_docs.select(
                 F.col(id_col).cast("long").alias("doc_id")
             ).distinct()
@@ -394,7 +392,7 @@ def update_bm25_index(
                     text_col,
                     id_col,
                     expected_postings_version=postings_version,
-                    expected_stats_version=stats_version or 0,
+                    expected_stats_version=stats_version,
                 )
         raise RuntimeError(
             f"bm25 index at {path} is torn: "
@@ -403,8 +401,8 @@ def update_bm25_index(
             "and this batch does not cover the indexed docs; rebuild "
             "over the full corpus with save_bm25_index"
         )
-    postings = postings_store.read()
-    srow = stats_store.read().first()
+    postings = postings_store.read_version(postings_version)
+    srow = stats_store.read_version(stats_version).first()
     stats_n = int(srow["n_docs"])
     stats_len = int(srow["total_len"])
     stats_fpn = int(srow["fp_n"])
@@ -556,25 +554,16 @@ def update_bm25_index(
     # threshold-gated OPTIMIZE (after BOTH artifacts land, so the
     # torn-state window is unchanged; compaction rewrites the same
     # rows, so the stats fingerprint still agrees and the repair
-    # path's version-diff logic sees a content-identical snapshot).
-    # Losing the race to a concurrent fold is swallowed: the fold
-    # landed, and the winner re-checks the still-exceeded threshold.
-    try:
-        compacted = postings_store.maybe_compact(
-            max_files=POSTINGS_COMPACT_MAX_FILES,
-            n_files=POSTINGS_COMPACT_FILES,
-            cluster_by=["token"],
-        )
-    except ConcurrentWriteError:
-        compacted = None
-    if compacted is not None:
-        if vacuum_retain is not None:
-            # retention ONLY after a compaction materialized a full
-            # copy — the append-only path's hard links cost nothing
-            # to keep (see POSTINGS_VACUUM_RETAIN for the trade)
-            postings_store.vacuum(retain_last=vacuum_retain)
-        return compacted
-    return version
+    # path's version-diff logic sees a content-identical snapshot;
+    # see POSTINGS_VACUUM_RETAIN for the retention trade)
+    compacted = compact_and_vacuum(
+        postings_store,
+        POSTINGS_COMPACT_MAX_FILES,
+        POSTINGS_COMPACT_FILES,
+        ["token"],
+        vacuum_retain,
+    )
+    return version if compacted is None else compacted
 
 
 def load_bm25_index(
@@ -590,12 +579,7 @@ def load_bm25_index(
     """
     stats_store = TableStore(spark, f"{path}/stats", BM25_STATS_SCHEMA)
     postings_store = TableStore(spark, f"{path}/postings", BM25_POSTINGS_SCHEMA)
-    if (
-        not stats_store.exists()
-        or stats_store.current_version() is None
-        or not postings_store.exists()
-        or postings_store.current_version() is None
-    ):
+    if not stats_store.exists() or not postings_store.exists():
         return None
     srow = stats_store.read().first()
     if srow is None:

@@ -214,14 +214,13 @@ def update_dsir_model(
             "or rebuild over the full corpus"
         )
 
-    v = fold_append(
+    return fold_append(
         dsir_model_store(spark, path),
         rows,
         fresh_rows,
         n_files=DSIR_MODEL_FILES,
         skip_empty_bootstrap_result=0,
     )
-    return 0 if v is None else v
 
 
 def read_dsir_model(

@@ -153,7 +153,7 @@ def load_ivf_index(
     by centroid_id; None when absent or when the stored training
     params / corpus fingerprint don't match the expectation."""
     store = index_store(spark, path)
-    if not store.exists() or store.current_version() is None:
+    if not store.exists():
         return None
     rows = store.read().collect()
     if not rows:

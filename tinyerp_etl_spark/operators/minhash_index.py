@@ -143,13 +143,12 @@ def update_minhash_index(
     that no-op returns 0 (the "empty" version number) without creating
     a spurious empty artifact.
 
-    The BOOTSTRAP commit also rides optimistic concurrency
-    (``expected_version=0`` — "the store was empty when I looked"):
-    two writers racing to create the same index raise
-    ConcurrentWriteError for the loser instead of the second v1
-    silently shadowing the first writer's rows under
-    last-writer-wins, so the streaming face's retry loop covers the
-    very first micro-batch too.
+    The BOOTSTRAP commit also rides optimistic concurrency (against
+    version 0, the empty store): two writers racing to create the
+    same index raise ConcurrentWriteError for the loser instead of
+    the second v1 silently shadowing the first writer's rows, so the
+    streaming face's retry loop covers the very first micro-batch
+    too.
     """
     if on_overlap not in ("raise", "skip_existing"):
         raise ValueError(
@@ -222,8 +221,7 @@ def neardup_against_store(
     within-store duplication are the existing operators' jobs.
     """
     store = minhash_feature_store(spark, path)
-    version = store.current_version()
-    stored = store.read() if version is None else store.read_version(version)
+    stored = store.read()
     bf = materialize(build_minhash_features(batch, text_col, id_col))
     bb = bf.select(
         F.col("doc_id").alias("batch_doc"),

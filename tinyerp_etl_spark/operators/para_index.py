@@ -85,7 +85,7 @@ def save_paragraph_index(
 
 def load_paragraph_index(spark: SparkSession, path: str) -> DataFrame | None:
     store = para_store(spark, path)
-    if not store.exists() or store.current_version() is None:
+    if not store.exists():
         return None
     return store.read()
 
@@ -107,7 +107,7 @@ def fold_batch_into_paragraph_index(
     carries it as expected_version — so a concurrent folder that
     lands in between raises ConcurrentWriteError instead of this
     writer silently omitting its paragraphs; the bootstrap commit
-    pins expected_version=0 (atomic first-writer-wins). The no-op
+    pins version 0, the empty store (first writer wins). The no-op
     probe is a limit(1) count on the batch-vs-store anti-join —
     O(batch + one column-pruned join), never a count of the
     data-scale store.

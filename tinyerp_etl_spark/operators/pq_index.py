@@ -209,7 +209,7 @@ def load_pq_index(
     the stored (m, ks, iters, sample_cap) / corpus fingerprint don't
     match the expectation — the caller then retrains."""
     store = pq_store(spark, path)
-    if store.current_version() is None:  # exists() is this same check
+    if not store.exists():
         return None
     rows = store.read().collect()
     if not rows:

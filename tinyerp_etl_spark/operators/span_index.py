@@ -472,10 +472,7 @@ def clean_batch_against_store(
     — canonicality would silently land on the store copy).
     """
     store = span_gram_store(spark, path)
-    version = store.current_version()
-    stored = (
-        store.read() if version is None else store.read_version(version)
-    )
+    stored = store.read()
     # _prebuilt_pg: the composed clean-and-fold loop tokenizes the
     # batch ONCE and shares the pinned positional rows between this
     # clean and the subsequent gram fold (optimization round 14) —
@@ -664,10 +661,7 @@ def gram_novelty_against_store(
     version-pinned store scan; sub-k docs report (0, 0, 0).
     """
     store = span_gram_store(spark, path)
-    version = store.current_version()
-    stored = (
-        store.read() if version is None else store.read_version(version)
-    )
+    stored = store.read()
     _check_k(_stored_k(stored), k, path, "probing")
     # materialized because the distinct-gram frame feeds THREE
     # independent subtrees below (the broadcast store probe, the seen
@@ -790,7 +784,7 @@ def clean_and_fold_batch(
     """
     store = span_gram_store(spark, index_path)
     version = store.current_version()
-    if version is None:
+    if version == 0:
         fresh = batch
     else:
         indexed = (

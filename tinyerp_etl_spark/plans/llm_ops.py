@@ -3196,7 +3196,7 @@ def _span_store_for(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
         path = os.path.join(
             _artifact_root(), "span_index", _corpus_tag(sf_dir, fp)
         )
-        if SI.span_gram_store(spark, path).current_version() is None:
+        if not SI.span_gram_store(spark, path).exists():
             SI.update_span_index(spark, path, first)
         _SPAN_STORE_CACHE[key] = (path, thr)
     return _SPAN_STORE_CACHE[key]
@@ -4444,7 +4444,7 @@ def _minhash_store_for(spark: SparkSession, sf_dir: str) -> str:
         path = os.path.join(
             _artifact_root(), "minhash_index", _corpus_tag(sf_dir, fp)
         )
-        if MH.minhash_feature_store(spark, path).current_version() is None:
+        if not MH.minhash_feature_store(spark, path).exists():
             MH.save_minhash_index(spark, path, store_docs)
         _MINHASH_STORE_CACHE[key] = path
     return _MINHASH_STORE_CACHE[key]
@@ -4609,7 +4609,7 @@ def _ivf_store_corpus_for(spark: SparkSession, sf_dir: str):
         ),
         partition_by=["list_id"],
     )
-    if store.current_version() is None:
+    if not store.exists():
         cents = _ivf_index_for(spark, sf_dir)
         book = _pq_index_for(spark, sf_dir)
         emb = (
@@ -5430,7 +5430,7 @@ def _dsir_two_fold_init(
                 )
             )
 
-    if store.current_version() is not None:
+    if store.exists():
         hi = store.read().agg(F.max("hi_doc_id")).first()[0]
         if hi is not None and int(hi) > thr:
             return  # both folds' gram mass is in

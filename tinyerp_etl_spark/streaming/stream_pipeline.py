@@ -121,9 +121,7 @@ def run_stream_to_merge_sink(
     (a backfill, a compaction job) advanced the table in between, the
     commit raises instead of silently overwriting that writer's rows —
     the sink then re-reads and re-merges (the MERGE is idempotent, so
-    the retry is safe), up to ``occ_retries`` times. With no
-    concurrent writer the expected_version check always passes and
-    behavior is unchanged.
+    the retry is safe), up to ``occ_retries`` times.
     """
     from tinyerp_etl_spark.etl.fold import drain_available_now, occ_fold
 
@@ -131,12 +129,8 @@ def run_stream_to_merge_sink(
         df = transform(batch_df) if transform is not None else batch_df
 
         def fold() -> None:
-            # `or 0`: a fresh store reads version None, and commit()
-            # treats expected_version=None as "no check" — 0 means
-            # "expected empty", which keeps OCC armed for the FIRST
-            # batch into a new table too
-            base = store.current_version() or 0
-            merged = merge_upsert(store.read(), df, keys)
+            base = store.current_version()
+            merged = merge_upsert(store.read_version(base), df, keys)
             store.commit(merged, expected_version=base)
 
         occ_fold(fold, occ_retries)
@@ -333,9 +327,9 @@ def run_windowed_stream(
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         def fold() -> None:
-            base = store.current_version() or 0
+            base = store.current_version()
             merged = merge_upsert(
-                store.read(), batch_df, ["window_start", "event_type"]
+                store.read_version(base), batch_df, ["window_start", "event_type"]
             )
             store.commit(merged, expected_version=base)
 
