@@ -106,6 +106,30 @@ def test_second_run_is_incremental_noop(spark, sf_dir, stores):
     assert tgt.current_version() == v1  # no data page → no new version
 
 
+def test_store_max_is_read_only_without_a_watermark(spark, sf_dir, stores, tmp_path):
+    """MAX(business ts) scans the whole store and feeds only the
+    synthetic bootstrap: a run with a stored watermark never asks."""
+    wm, cp, tgt = stores
+    calls = []
+
+    def max_ts(df):
+        calls.append(df)
+        return NOW - timedelta(days=1)
+
+    cfg = _sync_cfg(spark, sf_dir, tgt)
+    cfg.max_business_ts = max_ts
+    run_entity_sync(spark, cfg, wm, cp, now=NOW)  # empty store: no MAX
+    run_entity_sync(spark, cfg, wm, cp, now=NOW + timedelta(days=1))
+    assert calls == []
+    # no watermark but a loaded store: the synthetic bootstrap reads it
+    res = run_entity_sync(
+        spark, cfg, WatermarkStore(spark, str(tmp_path / "wm2")), cp,
+        now=NOW + timedelta(days=1),
+    )
+    assert len(calls) == 1
+    assert res.filter_ts == NOW.replace(hour=0)
+
+
 def test_rerun_after_watermark_reset_is_idempotent(spark, sf_dir, stores):
     """At-least-once delivery + idempotent MERGE ⇒ same table."""
     wm, cp, tgt = stores

@@ -56,11 +56,11 @@ def test_fold_append_skeleton_contracts(spark, tmp_path):
     anti = lambda stored, batch: batch.join(
         stored.select("k"), "k", "left_anti"
     )
-    # empty bootstrap with skip result: no artifact created
+    # an empty first batch creates no version
     empty = rows().limit(0)
-    assert fold_append(store, empty, anti, skip_empty_bootstrap_result=0) == 0
+    assert fold_append(store, empty, anti) == 0
     assert store.current_version() == 0
-    # bootstrap commits under OCC
+    # the first batch appends onto version 0
     v1 = fold_append(store, rows((1, "a"), (2, "b")), anti)
     assert v1 == 1
     # full replay is a version-preserving no-op

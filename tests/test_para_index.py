@@ -47,6 +47,17 @@ def test_fold_equals_rebuild_and_replay_preserves_version(spark, tmp_path):
     assert para_store(spark, path).current_version() == v2
 
 
+def test_empty_first_batch_creates_no_version(spark, tmp_path):
+    """A first batch with no paragraphs leaves the store at version 0,
+    the empty table; the next batch lands v1."""
+    path = str(tmp_path / "pidx")
+    assert fold_batch_into_paragraph_index(spark, path, _docs(spark, [])) == 0
+    assert para_store(spark, path).current_version() == 0
+    assert load_paragraph_index(spark, path) is None
+    assert fold_batch_into_paragraph_index(spark, path, _docs(spark, [(1, P1)])) == 1
+    assert _as_set(load_paragraph_index(spark, path)) == {(P1, 1, 0)}
+
+
 def test_out_of_order_backfill_is_rejected_before_commit(spark, tmp_path):
     path = str(tmp_path / "pidx")
     fold_batch_into_paragraph_index(spark, path, _docs(spark, [(100, P1)]))

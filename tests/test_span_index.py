@@ -554,24 +554,3 @@ def test_fold_rows_derived_from_clean_pg_match_direct_build(spark, tmp_path):
         tuple(r) for r in SI.build_span_gram_rows(b).collect()
     )
     assert stored == direct
-
-
-def test_prebuilt_fold_rows_enforce_first_occurrence(spark, tmp_path):
-    """ADVICE r14 / optimization round 15: update_span_index must
-    STRUCTURALLY collapse a prebuilt frame to per-(gram, doc)
-    first-occurrence rows — a caller passing raw keyed_positional_rows
-    (one row per OCCURRENCE) can no longer silently fold duplicate
-    (gram_key, doc_id) rows into the store."""
-    b = _docs(spark, [(1, f"one two {_SHARED} three {_SHARED} tail")])
-    idx = str(tmp_path / "idx")
-    raw = SI.keyed_positional_rows(b)  # one row per occurrence
-    SI.update_span_index(spark, idx, b, prebuilt_gram_rows=raw)
-    stored = sorted(
-        tuple(r)
-        for r in SI.span_gram_store(spark, idx)
-        .read()
-        .select("gram_key", "doc_id", "pos", "k")
-        .collect()
-    )
-    direct = sorted(tuple(r) for r in SI.build_span_gram_rows(b).collect())
-    assert stored == direct  # collapsed, min-pos, k-stamped

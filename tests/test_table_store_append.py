@@ -44,11 +44,17 @@ def test_append_reads_union_and_writes_only_batch(spark, tmp_path):
     assert _rows(st.read_version(1)) == sorted(base)
 
 
-def test_append_requires_base_and_respects_occ(spark, tmp_path):
+def test_append_onto_empty_store_and_respects_occ(spark, tmp_path):
     st = _store(spark, tmp_path)
-    with pytest.raises(ValueError, match="bootstrap"):
-        st.commit_append(local_df(spark, [(1, "x")], SCHEMA))
-    st.commit(local_df(spark, [(1, "x")], SCHEMA), n_files=1)
+    # version 0 is the empty table: the append lands v1 with only the batch
+    assert st.commit_append(local_df(spark, [(1, "x")], SCHEMA), n_files=1) == 1
+    assert _rows(st.read()) == [(1, "x")]
+    assert st.data_file_count(1) == 1
+    # a second creator that also read version 0 loses
+    with pytest.raises(ConcurrentWriteError):
+        st.commit_append(
+            local_df(spark, [(9, "z")], SCHEMA), expected_version=0
+        )
     v = st.current_version()
     st.commit(st.read(), n_files=1)  # concurrent writer advances
     with pytest.raises(ConcurrentWriteError):
@@ -61,6 +67,25 @@ def test_append_requires_base_and_respects_occ(spark, tmp_path):
         expected_version=st.current_version(),
     )
     assert _rows(st.read()) == [(1, "x"), (2, "y")]
+
+
+def test_empty_store_reads_start_no_job(spark, tmp_path):
+    """Version 0 is a local relation: reading the empty table, and the
+    IVF/PQ loaders that collect it, start no Spark job."""
+    from tinyerp_etl_spark.operators.ivf_index import load_ivf_index
+    from tinyerp_etl_spark.operators.pq_index import load_pq_index
+
+    sc = spark.sparkContext
+    st = _store(spark, tmp_path)
+    sc.setJobGroup("empty-read", "reads of version 0")
+    try:
+        assert st.read().collect() == []
+        assert st.read().limit(1).isEmpty()
+        assert load_ivf_index(spark, str(tmp_path / "ivf")) is None
+        assert load_pq_index(spark, str(tmp_path / "pq")) is None
+        assert list(sc.statusTracker().getJobIdsForGroup("empty-read")) == []
+    finally:
+        sc.setJobGroup(None, None)
 
 
 def test_vacuum_of_base_keeps_appended_version_readable(spark, tmp_path):

@@ -9,11 +9,12 @@ every next store would have had to re-implement them — the exact
 surface a crash window re-enters through. This module is the single
 copy (the sixth and seventh stores are pure instances):
 
-- ``fold_append``: the claim-version → bootstrap-under-OCC →
-  pinned-read → fresh-rows filter → no-op probe → incremental
-  ``commit_append`` skeleton (the MinHash and paragraph folds are
-  pure instances; BM25's two-artifact fold keeps its specialist
-  torn-state repair but shares the streaming pieces below).
+- ``fold_append``: the claim-version → pinned-read → fresh-rows
+  filter → no-op probe → incremental ``commit_append`` skeleton, one
+  path for every version, 0 (the empty store) included (the MinHash
+  and paragraph folds are pure instances; BM25's two-artifact fold
+  keeps its specialist torn-state repair but shares the streaming
+  pieces below).
 - ``occ_fold``: the optimistic-concurrency retry loop — recompute the
   whole read-modify-write against the winner on ConcurrentWriteError,
   give up loudly after ``occ_retries``.
@@ -116,7 +117,6 @@ def fold_append(
     fresh_rows: Callable[[DataFrame, DataFrame], DataFrame],
     n_files: int | None = None,
     cluster_by: list[str] | None = None,
-    skip_empty_bootstrap_result: int | None = None,
     compact_max_files: int | None = None,
     compact_n_files: int | None = None,
     vacuum_retain: int | None = None,
@@ -124,31 +124,28 @@ def fold_append(
     """The append-only fold skeleton shared by the single-artifact
     feature stores.
 
-    1. CLAIM: ``current_version()`` once, up front.
-    2. BOOTSTRAP: an empty store (version 0) commits the whole
-       batch against version 0, so two racing creators raise for the
-       loser instead of the second v1 shadowing the first. When
-       ``skip_empty_bootstrap_result`` is set and the batch is empty,
-       no spurious empty artifact is created and that value returns
-       (the MinHash contract: an all-too-short batch leaves nothing);
-       unset, the bootstrap commits whatever the batch holds (the
-       paragraph contract).
-    3. PINNED READ: the claimed version is read via ``read_version``,
+    1. CLAIM: ``current_version()`` once, up front (0 for the empty
+       store).
+    2. PINNED READ: the claimed version is read via ``read_version``,
        never a floating ``read()`` — a concurrent fold landing between
        steps cannot make the fresh-rows probe and the commit see
-       different corpora.
-    4. FRESH ROWS: ``fresh_rows(stored_pinned, batch_rows)`` returns
+       different corpora. Version 0 stores nothing, so there the
+       batch is the fresh set and steps 2-3 are skipped.
+    3. FRESH ROWS: ``fresh_rows(stored_pinned, batch_rows)`` returns
        what the batch genuinely adds (anti-join away replays, keep
        first occurrences, raise on a contract breach — the per-store
        semantics live HERE and only here). Returning ``batch_rows``
        itself skips the extra materialization.
-    5. NO-OP: nothing fresh ⇒ the claimed version returns unchanged —
-       a fully-replayed batch folds to exactly-once.
-    6. APPEND: ``commit_append`` hard-links the previous version's
+    4. NO-OP: nothing fresh ⇒ the claimed version returns unchanged —
+       a fully-replayed batch folds to exactly-once, and an empty
+       first batch creates no version (0 returns).
+    5. APPEND: ``commit_append`` hard-links the previous version's
        immutable files and writes only the fresh rows' files — fold
        IO ∝ batch — carrying ``expected_version`` so a concurrent
-       writer raises for ``occ_fold`` to retry.
-    7. MAINTENANCE (opt-in via ``compact_max_files``): after the
+       writer raises for ``occ_fold`` to retry; two racing creators
+       of a new store both append onto version 0, and the loser
+       raises instead of its v1 shadowing the winner's.
+    6. MAINTENANCE (opt-in via ``compact_max_files``): after the
        append lands, a threshold-gated ``maybe_compact`` rewrites the
        store into ``compact_n_files`` globally-clustered files when
        the file count exceeds the threshold. Appends keep
@@ -167,7 +164,7 @@ def fold_append(
        an O(table) rewrite every fold. Returns the compacted version
        when compaction ran, else the appended version — callers get
        "the current version containing my fold" either way.
-    8. RETENTION (via ``vacuum_retain``, only meaningful with
+    7. RETENTION (via ``vacuum_retain``, only meaningful with
        compaction enabled; the harness default is None — each STORE
        picks its policy, and the three compacted production stores
        pass 3: span_index.SPAN_VACUUM_RETAIN,
@@ -189,24 +186,13 @@ def fold_append(
        to keep.
     """
     version = store.current_version()
-    if version == 0:
-        if (
-            skip_empty_bootstrap_result is not None
-            and batch_rows.limit(1).isEmpty()
+    fresh = batch_rows
+    if version > 0:
+        fresh = fresh_rows(store.read_version(version), batch_rows)
+        if fresh is not batch_rows and not getattr(
+            fresh, _PREMATERIALIZED_ATTR, False
         ):
-            return skip_empty_bootstrap_result
-        return store.commit(
-            batch_rows,
-            n_files=n_files,
-            cluster_by=cluster_by,
-            expected_version=version,
-        )
-    stored = store.read_version(version)
-    fresh = fresh_rows(stored, batch_rows)
-    if fresh is not batch_rows and not getattr(
-        fresh, _PREMATERIALIZED_ATTR, False
-    ):
-        fresh = materialize(fresh)
+            fresh = materialize(fresh)
     if fresh.limit(1).isEmpty():
         return version
     appended = store.commit_append(
@@ -235,7 +221,7 @@ def compact_and_vacuum(
     cluster_by: list[str] | None,
     vacuum_retain: int | None,
 ) -> int | None:
-    """A fold's maintenance tail (``fold_append`` steps 7-8, also run
+    """A fold's maintenance tail (``fold_append`` steps 6-7, also run
     by the BM25 fold): ``maybe_compact``, then
     ``vacuum(retain_last=vacuum_retain)`` only when a compaction ran.
     Returns the compacted version, or None when the store is under

@@ -121,11 +121,14 @@ def run_entity_sync(
     """One incremental sync step (ref executar_etapa_paginada :324-375)."""
     step_start = now or datetime.now(timezone.utc)  # ref :326
 
+    stored = watermarks.get(cfg.name)
+    # the MAX scans the whole store, and only the synthetic bootstrap
+    # (no stored watermark) reads it
     existing_max = None
-    if cfg.max_business_ts is not None and cfg.store.exists():
+    if stored is None and cfg.max_business_ts is not None and cfg.store.exists():
         existing_max = cfg.max_business_ts(cfg.store.read())
     filter_ts = resolve_filter_timestamp(
-        stored=watermarks.get(cfg.name),
+        stored=stored,
         max_business_ts=existing_max,
         now=step_start,
         safety_days=cfg.safety_days,

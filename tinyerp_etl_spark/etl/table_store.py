@@ -168,10 +168,19 @@ class TableStore:
         them), so any retained version stays readable — the input to
         merge.snapshot_diff CDC recovery and to reproducing what a
         query saw at an earlier run. Version 0 is the empty table in
-        the current schema. Raises if the version was never committed.
+        the current schema, a local relation: an action on it starts
+        no Spark job (``createDataFrame([], schema)`` would scan an
+        empty RDD). Raises if the version was never committed.
         """
         if version == 0:
-            return self.spark.createDataFrame([], self.schema)
+            jss = self.spark._jsparkSession
+            return DataFrame(
+                jss.createDataFrame(
+                    self.spark._jvm.java.util.ArrayList(),
+                    jss.parseDataType(self.schema.json()),
+                ),
+                self.spark,
+            )
         d = self._version_dir(version)
         if not os.path.isdir(d):
             raise ValueError(f"version {version} does not exist at {self.path}")
@@ -335,21 +344,18 @@ class TableStore:
         APPEND-ONLY by contract: callers must guarantee ``new_rows``
         does not rewrite existing rows (the BM25/paragraph folds
         enforce this upstream); a replace needs ``commit()``.
-        Requires an existing base version — bootstrap with commit().
+        Appending onto version 0, the empty table, writes only the
+        batch — the same files ``commit()`` would write.
         Optimistic like ``commit()``: an append is "base ∪ batch", so
         a writer landing after ``base`` raises instead of losing rows.
         """
         base = self._check_base(expected_version)
-        if base == 0:
-            raise ValueError(
-                f"commit_append at {self.path} requires an existing "
-                "base version; bootstrap with commit()"
-            )
         staging = self._stage_write(new_rows, n_files, cluster_by)
         # reference the base version's data files (AFTER the Spark
         # write — overwrite mode clears the target dir). Spark part
         # file names embed a per-job UUID, so base and batch names
         # cannot collide; a collision is corruption, not a race.
+        # Version 0 has no directory, so there is nothing to link.
         base_dir = self._version_dir(base)
         for root, _dirs, files in os.walk(base_dir):
             rel = os.path.relpath(root, base_dir)

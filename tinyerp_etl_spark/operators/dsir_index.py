@@ -8,8 +8,8 @@ forever, and each batch's gram mass must join the raw model q WITHOUT
 re-featurizing history. Bucket counts are purely ADDITIVE, so the
 model folds exactly: this store keeps one (bucket, cnt) row per
 (fold, bucket) — at most ``n_buckets`` tiny rows per batch — through
-the shared fold harness (etl/fold.fold_append: claim → bootstrap-OCC
-→ pinned-read → replay filter → commit_append), and reading the model
+the shared fold harness (etl/fold.fold_append: claim → pinned-read →
+replay filter → commit_append under OCC), and reading the model
 is one sum over a broadcast-class table (≤ n_buckets × folds rows;
 ``TableStore.compact`` squashes a long fold history whenever wanted —
 the counts re-aggregate identically either way).
@@ -219,7 +219,6 @@ def update_dsir_model(
         rows,
         fresh_rows,
         n_files=DSIR_MODEL_FILES,
-        skip_empty_bootstrap_result=0,
     )
 
 

@@ -152,10 +152,7 @@ def load_ivf_index(
     """Load the current index version as [(centroid_id, ticks)] sorted
     by centroid_id; None when absent or when the stored training
     params / corpus fingerprint don't match the expectation."""
-    store = index_store(spark, path)
-    if not store.exists():
-        return None
-    rows = store.read().collect()
+    rows = index_store(spark, path).read().collect()
     if not rows:
         return None
     if expect_params is not None:

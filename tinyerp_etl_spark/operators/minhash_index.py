@@ -130,9 +130,8 @@ def update_minhash_index(
     replayed batch is a version-preserving no-op). The overlap probe
     is a column-pruned doc_id read of the store, PINNED to the claimed
     version by the shared harness (etl/fold.fold_append — the claim →
-    bootstrap-OCC → pinned-read → fresh-filter → commit_append
-    skeleton lives there; only the anti-join/raise semantics live
-    here). Both the probe and
+    pinned-read → fresh-filter → commit_append skeleton lives there;
+    only the anti-join/raise semantics live here). Both the probe and
     the commit ride ``expected_version``: a concurrent fold raises
     ConcurrentWriteError for the caller (or the streaming face's
     retry loop) to recompute against the winner.
@@ -143,12 +142,11 @@ def update_minhash_index(
     that no-op returns 0 (the "empty" version number) without creating
     a spurious empty artifact.
 
-    The BOOTSTRAP commit also rides optimistic concurrency (against
-    version 0, the empty store): two writers racing to create the
-    same index raise ConcurrentWriteError for the loser instead of
-    the second v1 silently shadowing the first writer's rows, so the
-    streaming face's retry loop covers the very first micro-batch
-    too.
+    The FIRST fold is the same append, against version 0, the empty
+    store: two writers racing to create the same index raise
+    ConcurrentWriteError for the loser instead of the second v1
+    silently shadowing the first writer's rows, so the streaming
+    face's retry loop covers the very first micro-batch too.
     """
     if on_overlap not in ("raise", "skip_existing"):
         raise ValueError(
@@ -175,7 +173,6 @@ def update_minhash_index(
         feats,
         fresh_rows,
         n_files=FEATURE_FILES,
-        skip_empty_bootstrap_result=0,
     )
 
 

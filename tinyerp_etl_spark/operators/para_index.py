@@ -106,8 +106,9 @@ def fold_batch_into_paragraph_index(
     read pins that exact version (read_version), then the commit
     carries it as expected_version — so a concurrent folder that
     lands in between raises ConcurrentWriteError instead of this
-    writer silently omitting its paragraphs; the bootstrap commit
-    pins version 0, the empty store (first writer wins). The no-op
+    writer silently omitting its paragraphs; the first fold commits
+    against version 0, the empty store (first writer wins), and a
+    first batch with no paragraphs creates no version. The no-op
     probe is a limit(1) count on the batch-vs-store anti-join —
     O(batch + one column-pruned join), never a count of the
     data-scale store.

@@ -208,10 +208,7 @@ def load_pq_index(
     """Load the current codebook version; None when absent or when
     the stored (m, ks, iters, sample_cap) / corpus fingerprint don't
     match the expectation — the caller then retrains."""
-    store = pq_store(spark, path)
-    if not store.exists():
-        return None
-    rows = store.read().collect()
+    rows = pq_store(spark, path).read().collect()
     if not rows:
         return None
     if expect_params is not None:

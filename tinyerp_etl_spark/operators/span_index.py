@@ -10,8 +10,8 @@ same shape as the BM25 postings / MinHash feature / paragraph
 first-occurrence stores): at ingest each batch registers one row per
 (gram, doc) — (gram_key, doc_id, pos of the doc's first occurrence) —
 through the shared fold harness (etl/fold.fold_append: claim →
-bootstrap-OCC → pinned-read → doc-novelty filter → commit_append, IO
-∝ batch); at clean time the batch's gram keys broadcast into a
+pinned-read → doc-novelty filter → commit_append under OCC, IO ∝
+batch); at clean time the batch's gram keys broadcast into a
 semi-join probing ONE column-pruned store scan, so the historical
 corpus never shuffles and never re-tokenizes.
 
@@ -127,7 +127,7 @@ SPAN_PUSHDOWN_MIN_STORE_ROWS_PER_KEY = 16_384
 SPAN_COMPACT_MAX_FILES = 64
 SPAN_COMPACT_FILES = 16
 
-#: Post-compaction retention (fold_append step 8). Appends hard-link
+#: Post-compaction retention (fold_append step 7). Appends hard-link
 #: the previous version's files — near-zero storage, never reaped —
 #: but each compaction MATERIALIZES a full store copy; without
 #: retention every trip adds one permanent full copy (O(table) disk
@@ -176,6 +176,27 @@ def _check_k(stored_k: int | None, k: int, path: str, what: str) -> None:
             f"span index at {path} was built at k={stored_k}; {what} "
             f"with k={k} would hash different grams and silently match "
             "no history — build a separate store per span width"
+        )
+
+
+def _check_ingest_order(fresh: DataFrame, stored: DataFrame, path: str) -> None:
+    """Raise unless every genuinely-new doc postdates everything
+    indexed — the ingest-order contract the sequential ≡ one-shot law
+    rests on. One column-pruned agg per side, the overlap probe's cost
+    class; a batch with no rows skips the store side."""
+    probe = fresh.agg(
+        F.min("doc_id").alias("lo"), F.count(F.lit(1)).alias("n")
+    ).first()
+    if not int(probe["n"]):
+        return
+    hi = stored.agg(F.max("doc_id").alias("hi")).first()["hi"]
+    if hi is not None and int(probe["lo"]) <= int(hi):
+        raise ValueError(
+            f"span index at {path}: batch doc_id {int(probe['lo'])} "
+            f"does not postdate the indexed max {int(hi)} — the "
+            "ingest-order contract (sequential ≡ one-shot law) "
+            "admits only increasing doc_ids; re-id the late "
+            "arrival or rebuild over the full corpus"
         )
 
 
@@ -251,20 +272,9 @@ def update_span_index(
     compact_max_files: int | None = SPAN_COMPACT_MAX_FILES,
     compact_n_files: int = SPAN_COMPACT_FILES,
     vacuum_retain: int | None = SPAN_VACUUM_RETAIN,
-    prebuilt_gram_rows: DataFrame | None = None,
-    _prepinned_fresh_rows: bool = False,
+    _fresh_gram_rows: DataFrame | None = None,
 ) -> int:
     """Fold a batch's ORIGINAL grams into the persisted index.
-
-    ``prebuilt_gram_rows`` (optimization round 14, guide §1.2 "don't
-    compute things twice"): a caller that has ALREADY tokenized the
-    batch into positional gram rows (the composed clean-and-fold
-    loop) can pass the ``build_span_gram_rows``-shaped frame —
-    (gram_key, doc_id, pos, k) with pos = per-(gram, doc) first
-    occurrence — and skip this function's own tokenize + posexplode
-    pass over the batch text. The frame MUST be derived from the
-    same ``new_docs`` batch at the same ``k``; all guards (replay
-    filter, ingest-order, k contract) run on it unchanged.
 
     Only the batch tokenizes AND only the batch's rows are written
     (the shared harness's ``commit_append``) — fold compute and IO
@@ -297,79 +307,30 @@ def update_span_index(
     store is a rebuildable derived artifact, so retention defaults ON
     (see SPAN_VACUUM_RETAIN for the retained-snapshot guarantee and
     the time-travel trade); ``vacuum_retain=None`` keeps every
-    version."""
+    version.
+
+    ``_fresh_gram_rows`` is ``clean_and_fold_batch``'s private
+    hand-over: its batch's ``build_span_gram_rows``-shaped rows, built
+    at this ``k`` from the same tokenize pass as the clean, pinned,
+    and taken from docs already anti-joined against the store's
+    current version. The fold then skips its own tokenize and replay
+    filter; the k and ingest-order guards still run."""
     if on_overlap not in ("raise", "skip_existing"):
         raise ValueError(
             f"on_overlap must be 'raise' or 'skip_existing', got {on_overlap!r}"
         )
-    if _prepinned_fresh_rows and prebuilt_gram_rows is None:
-        raise ValueError(
-            "_prepinned_fresh_rows requires prebuilt_gram_rows"
-        )
-    if _prepinned_fresh_rows:
-        # the composed clean-and-fold loop's PRIVATE fast path: the
-        # frame is ALREADY per-(gram, doc)-collapsed and pinned by
-        # gram_rows_from_positional over the loop's own positional
-        # pin (the one caller sits ten lines above in this module),
-        # so re-aggregating and re-materializing it here would be
-        # duplicate work (optimization round 15 — one small write +
-        # one exchange per fold step removed). The k contract stays
-        # STRUCTURAL even here (free projection over the pin); the
-        # first-occurrence collapse is owned by the caller's
-        # gram_rows_from_positional derivation — callers outside the
-        # composed loop must use the public prebuilt_gram_rows path,
-        # which re-collapses unconditionally.
-        rows = prebuilt_gram_rows.select("gram_key", "doc_id", "pos").withColumn(
-            "k", F.lit(int(k)).cast("long")
-        )
-    elif prebuilt_gram_rows is None:
-        rows = materialize(build_span_gram_rows(new_docs, text_col, id_col, k))
-    else:
-        # BOTH fold contracts are STRUCTURAL, not comment-enforced
-        # (optimization round 14 review + ADVICE r14): the k column is
-        # re-stamped from this call's k via gram_rows_from_positional's
-        # tail, and the same tail's groupBy min(pos) collapses a frame
-        # that still carries one row per OCCURRENCE — a caller passing
-        # raw keyed_positional_rows can no longer silently fold
-        # duplicate (gram_key, doc_id) rows and break the per-(gram,
-        # doc) first-occurrence invariant. Idempotent (and one cheap
-        # exchange) on already-collapsed input.
-        rows = materialize(
-            gram_rows_from_positional(
-                prebuilt_gram_rows.select("gram_key", "doc_id", "pos"),
-                "doc_id",
-                k,
-            )
-        )
+    rows = (
+        _fresh_gram_rows
+        if _fresh_gram_rows is not None
+        else materialize(build_span_gram_rows(new_docs, text_col, id_col, k))
+    )
 
     def fresh_rows(stored: DataFrame, batch: DataFrame) -> DataFrame:
         _check_k(_stored_k(stored), k, path, "folding")
-        if _prepinned_fresh_rows:
-            # the composed loop ALREADY anti-joined the batch against
-            # this store's current version (single logical writer per
-            # store, the module contract), so the replay-absorbing
-            # anti-join is a structural no-op here — skipped, while
-            # the law guards below (ingest-order probe; the k check
-            # above) still run on every fold
-            fresh = batch
-            probe = fresh.agg(
-                F.min("doc_id").alias("lo"), F.count(F.lit(1)).alias("n")
-            ).first()
-            if int(probe["n"]):
-                hi_row = stored.agg(F.max("doc_id").alias("hi")).first()
-                hi = hi_row["hi"]
-                if hi is not None and int(probe["lo"]) <= int(hi):
-                    raise ValueError(
-                        f"span index at {path}: batch doc_id "
-                        f"{int(probe['lo'])} does not postdate the "
-                        f"indexed max {int(hi)} — the ingest-order "
-                        "contract (sequential ≡ one-shot law) admits "
-                        "only increasing doc_ids; re-id the late "
-                        "arrival or rebuild over the full corpus"
-                    )
-            return fresh
         indexed = stored.select("doc_id").distinct()
-        if on_overlap == "raise":
+        if _fresh_gram_rows is not None:
+            fresh = batch  # replays already filtered out by the caller
+        elif on_overlap == "raise":
             n = (
                 batch.select("doc_id")
                 .distinct()
@@ -391,23 +352,7 @@ def update_span_index(
             # would run once for the probe and again when fold_append
             # writes the rows
             fresh = prematerialized(batch.join(indexed, "doc_id", "left_anti"))
-        # ingest-order guard: every genuinely-new doc must postdate
-        # everything indexed (one column-pruned agg per side, the
-        # overlap probe's cost class)
-        probe = fresh.agg(
-            F.min("doc_id").alias("lo"), F.count(F.lit(1)).alias("n")
-        ).first()
-        if int(probe["n"]):
-            hi_row = stored.agg(F.max("doc_id").alias("hi")).first()
-            hi = hi_row["hi"]
-            if hi is not None and int(probe["lo"]) <= int(hi):
-                raise ValueError(
-                    f"span index at {path}: batch doc_id {int(probe['lo'])} "
-                    f"does not postdate the indexed max {int(hi)} — the "
-                    "ingest-order contract (sequential ≡ one-shot law) "
-                    "admits only increasing doc_ids; re-id the late "
-                    "arrival or rebuild over the full corpus"
-                )
+        _check_ingest_order(fresh, stored, path)
         return fresh
 
     return fold_append(
@@ -422,7 +367,6 @@ def update_span_index(
         # whole history's gram_key column per batch, O(history) at
         # 100 TB where this layout is O(matching row groups)
         cluster_by=["gram_key"],
-        skip_empty_bootstrap_result=0,
         # threshold-gated OPTIMIZE: appends keep the clustering only
         # per-file; past the threshold one O(table) rewrite restores
         # the GLOBAL gram_key tiling the key-set pushdown's stats
@@ -820,17 +764,12 @@ def clean_and_fold_batch(
                 stored.select(id_col), id_col, "left_anti"
             ),
             n_files=SPAN_FILES,
-            skip_empty_bootstrap_result=0,
         )
-    # fold fast path: fr is already collapsed, k-stamped and pinned,
-    # and `fresh` was anti-joined against this store's CURRENT version
-    # above (single logical writer), so the fold skips its replay
-    # anti-join and its re-materialize while keeping the k and
-    # ingest-order guards (optimization round 15)
+    # fr is already collapsed, k-stamped and pinned, and `fresh` was
+    # anti-joined against this store's CURRENT version above (single
+    # logical writer): the fold writes fr as is
     update_span_index(
-        spark, index_path, fresh, text_col, id_col,
-        on_overlap="skip_existing", k=k,
-        prebuilt_gram_rows=fr, _prepinned_fresh_rows=True,
+        spark, index_path, fresh, text_col, id_col, k=k, _fresh_gram_rows=fr
     )
     return cleaned
 

@@ -6105,7 +6105,7 @@ def _web_dsir_store_for(
     fingerprint — any change to the extract/dedup/quality chain
     changes the fingerprint and retires the store rather than
     silently serving stale counts. Two-fold initialised through the
-    shared bootstrap like every sibling store."""
+    shared fold like every sibling store."""
     key = os.path.abspath(sf_dir)
     if key not in _WEB_DSIR_STORE_CACHE:
         from tinyerp_etl_spark.operators.ivf_index import (
