@@ -22,194 +22,108 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from tinyerp_etl_spark.plans.registry import all_queries
 from tinyerp_etl_spark.session import get_spark
 
-# Headline set: the queries that exercise the engine's hot paths —
-# full-table agg, multi-join, window, top-k — plus (as they land)
-# dedup/similarity/text operators. Names must exist in all_queries().
-HEADLINE = [
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_local_supplier_volume",
-    "q8_market_share",
-    "q18_large_volume_customers",
-    "q9_product_type_profit",
-    "q21_sole_late_shippers",
-    "window_latest_order_per_customer",
-    "join_left_enrich",
-    "topk_expensive_orders",
-    "exists_returned_orders",
-    "monthly_revenue_trend",
-    "sql_q6_forecast_revenue",
-    "skew_salted_event_totals",
-    "tfidf_top_terms",
-    "events_tumbling_hourly",
-    "asof_purchase_to_view",
-    "range_join_event_bursts",
-    "kmv_distinct_users",
-    "minhash_lsh_neardup_pairs",
-    "text_profile_docs",
-    "heavy_hitter_tokens",
-    "scd2_user_event_history",
-    "decontaminate_docs",
-    "anomaly_zscore_daily_revenue",
-    "embedding_topk_bruteforce",
-    "embedding_topk_ivf",
-]
+# Headline set, in timing order: each query and the round that added
+# it (the first headline set counts as round 3). Names must exist in
+# all_queries().
+HEADLINE: dict[str, int] = {
+    "q1_pricing_summary": 3,
+    "q3_shipping_priority": 3,
+    "q5_local_supplier_volume": 3,
+    "q8_market_share": 3,
+    "q18_large_volume_customers": 3,
+    "q9_product_type_profit": 3,
+    "q21_sole_late_shippers": 3,
+    "window_latest_order_per_customer": 3,
+    "join_left_enrich": 3,
+    "topk_expensive_orders": 3,
+    "exists_returned_orders": 3,
+    "monthly_revenue_trend": 3,
+    "sql_q6_forecast_revenue": 3,
+    "skew_salted_event_totals": 3,
+    "tfidf_top_terms": 3,
+    "events_tumbling_hourly": 3,
+    "asof_purchase_to_view": 3,
+    "range_join_event_bursts": 3,
+    "kmv_distinct_users": 3,
+    "minhash_lsh_neardup_pairs": 3,
+    "text_profile_docs": 3,
+    "heavy_hitter_tokens": 3,
+    "scd2_user_event_history": 3,
+    "decontaminate_docs": 3,
+    "anomaly_zscore_daily_revenue": 3,
+    "embedding_topk_bruteforce": 3,
+    "embedding_topk_ivf": 3,
+    "sequence_packing_manifest": 4,
+    "domain_mixture_resample": 4,
+    "approx_quantile_order_totals": 4,
+    "key_skew_profile_events": 4,
+    "incremental_dedup_new_docs": 4,
+    "curation_pipeline_manifest": 4,
+    "unigram_surprisal_filter": 4,
+    "q2_min_cost_supplier": 4,
+    "q14_promo_revenue": 4,
+    "q17_small_quantity_revenue": 4,
+    "q22_dormant_customers": 4,
+    "kmv_sketch_rollup": 4,
+    "hll_union_rollup": 4,
+    "data_profile_orders": 4,
+    "sql_ml_inference_score": 4,
+    "zorder_clustered_scan": 4,
+    "bucketed_join_revenue": 4,
+    "semantic_dedup_embeddings": 5,
+    "bm25i_retrieval_docs": 5,
+    "bm25i_index_retrieval": 7,
+    "hybrid_rrf_retrieval": 7,
+    "paragraph_dedup_docs": 7,
+    "bloom_decontaminate_docs": 7,
+    "bpe_train_merges": 7,
+    "bpe_segment_stats": 7,
+    "ngram_decontaminate_docs": 9,
+    "dup_span_coverage_docs": 9,
+    "pq_topk_embeddings": 9,
+    "ivfpq_topk_embeddings": 9,
+    "minhash_store_neardup": 9,
+    "embedding_neardup_store": 9,
+    "embedding_knn_join_routed": 10,
+    "dedup_span_removal_docs": 10,
+    "incremental_span_removal_docs": 10,
+    "decontaminate_span_removal_docs": 11,
+    "per_source_cap_sample": 11,
+    "quality_percentile_by_source": 11,
+    "embedding_knn_join_inline": 11,
+    "gram_novelty_docs": 11,
+    "span_clean_and_fold_docs": 11,
+    "dsir_importance_sample": 11,
+    "cluster_balanced_sample": 11,
+    "incremental_dsir_sample": 11,
+    "ctfidf_source_terms": 11,
+    "html_extract_docs": 11,
+    "url_normalize_dedup": 11,
+    "web_curation_pipeline_manifest": 11,
+    "dup_cluster_histogram": 11,
+    "lang_id_confusion": 11,
+    "simhash_neardup_docs": 11,
+    "web_manifest_store_scored": 12,
+    "gopher_quality_docs": 12,
+    "line_dedup_docs": 12,
+    "gopher_repetition_docs": 13,
+    "winnow_fingerprint_docs": 14,
+    "nfc_normalize_docs": 14,
+    "domain_blocklist_filter": 14,
+    "c4_line_filter_docs": 14,
+    "robots_txt_filter": 14,
+}
 
-# Added round 4: the training-pipeline ops that landed this round.
-# Kept out of the r1-r3 comparable set so round-over-round totals stay
-# apples-to-apples (see comparable_r3_total in the output line).
-HEADLINE_R4 = [
-    "sequence_packing_manifest",
-    "domain_mixture_resample",
-    "approx_quantile_order_totals",
-    "key_skew_profile_events",
-    "incremental_dedup_new_docs",
-    "curation_pipeline_manifest",
-    "unigram_surprisal_filter",
-    # TPC-H completions (Q2/Q14/Q17/Q22 shapes), also new in round 4
-    "q2_min_cost_supplier",
-    "q14_promo_revenue",
-    "q17_small_quantity_revenue",
-    "q22_dormant_customers",
-    # mergeable-sketch rollups, also new in round 4
-    "kmv_sketch_rollup",
-    "hll_union_rollup",
-    # single-scan profiler + fused-SQL ML inference, also new in round 4
-    "data_profile_orders",
-    "sql_ml_inference_score",
-    # z-order clustered write + 2-D predicate read-back
-    "zorder_clustered_scan",
-    # bucketed fact-fact join round-trip
-    "bucketed_join_revenue",
-]
-# Added round 5: semantic dedup + float-free ranked retrieval.
-HEADLINE_R5 = [
-    "semantic_dedup_embeddings",
-    "bm25i_retrieval_docs",
-]
-# Added round 7: the indexed retrieval face (scores from the persisted
-# postings index; its scan-face twin bm25i_retrieval_docs stays above
-# for the round-over-round comparison).
-HEADLINE_R7 = [
-    "bm25i_index_retrieval",
-    "hybrid_rrf_retrieval",
-    "paragraph_dedup_docs",
-    "bloom_decontaminate_docs",
-    "bpe_train_merges",
-    "bpe_segment_stats",
-]
-# Added round 9: the 13-gram decontamination join (the at-scale twin
-# of decontaminate_docs' broadcast-set probe, already benched above).
-HEADLINE_R9 = [
-    "ngram_decontaminate_docs",
-    "dup_span_coverage_docs",
-    # PQ: codebook-training parity face + compressed-domain ADC top-k
-    "pq_topk_embeddings",
-    # the FAISS-default composition of the two persisted artifacts
-    "ivfpq_topk_embeddings",
-    # batch-vs-store near-dup through the persisted MinHash feature
-    # index (featurize-at-ingest; the store never shuffles)
-    "minhash_store_neardup",
-    # its embedding-space modality twin through the IVF layout
-    "embedding_neardup_store",
-]
-# Added round 10: the auto-routed k-NN kernel at full probe depth
-# (exact; the brute face embedding_knn_join was never benched, so this
-# row is the kernel's first bench presence).
-HEADLINE_R10 = [
-    "embedding_knn_join_routed",
-    # ExactSubstr cleanup: keep-one-canonical span deletion with the
-    # rebuilt clean_text under the hash gate
-    "dedup_span_removal_docs",
-    # its incremental face: batch cleaned against the persisted
-    # span-gram index (history never rescans)
-    "incremental_span_removal_docs",
-]
-# Added round 11: the curation newcomers (each gated at birth).
-HEADLINE_R11 = [
-    # surgical eval-set decontamination (cut the span, keep the doc)
-    "decontaminate_span_removal_docs",
-    # deterministic per-domain document cap (crawl balancing)
-    "per_source_cap_sample",
-    # per-domain calibrated quality percentile (integer ppm)
-    "quality_percentile_by_source",
-    # the routed knn kernel's inline-train + memoized-centroids path
-    "embedding_knn_join_inline",
-    # distinct-gram novelty vs the persisted span-gram store
-    "gram_novelty_docs",
-    # the composed production ingest loop (clean -> append -> fold,
-    # three sequential batches; builds its scratch stores in-query)
-    "span_clean_and_fold_docs",
-    # DSIR importance resampling (hashed-ngram LLR data selection)
-    "dsir_importance_sample",
-    # diversity-preserving per-cluster embedding cap (salted top-N)
-    "cluster_balanced_sample",
-    # DSIR scoring through the persisted raw-model store
-    "incremental_dsir_sample",
-    # class-based TF-IDF labeling (per-source distinctive terms)
-    "ctfidf_source_terms",
-    # HTML -> text extraction over staged full pages (codegen regex)
-    "html_extract_docs",
-    # canonical-URL dedup (the cheapest pre-content dedup pass)
-    "url_normalize_dedup",
-    # END-TO-END web manifest: extract -> URL dedup -> C4 -> DSIR
-    "web_curation_pipeline_manifest",
-    # exact-dup cluster-size distribution (the standard dedup report)
-    "dup_cluster_histogram",
-    # language-ID confusion matrix (the pre-filter audit)
-    "lang_id_confusion",
-    # SimHash Hamming-ball near-dup pairs (guaranteed-recall banding)
-    "simhash_neardup_docs",
-]
-# Added round 12: the web manifest scored against the persisted DSIR
-# model store (the production composition; folded ≡ one-shot law),
-# plus the Gopher quality-rule filter and the CCNet-style
-# cross-document boilerplate-line removal.
-HEADLINE_R12 = [
-    "web_manifest_store_scored",
-    "gopher_quality_docs",
-    "line_dedup_docs",
-]
-# Added round 13 (queries added to the headline set THIS round; the
-# forced-track overlap total below excludes them so the r12 forced
-# numbers compare apples-to-apples).
-HEADLINE_R13: list[str] = [
-    # Gopher A1.2 within-document repetition family (the mapInPandas
-    # Arrow face: one Counter pass per granularity, map-side, no
-    # shuffle — the face the round-13 A/B shipped)
-    "gopher_repetition_docs",
-]
-# Added round 14: the winnowing fingerprint row, AFTER its 181x
-# rebind (145 -> 0.80 s forced at sf0.1 — the unbound hash array
-# re-ran the md5 transform per window slice). A row with that
-# pathology history belongs under the per-round bench watch; it
-# was invisible before precisely because it was not a headline row.
-HEADLINE_R14: list[str] = [
-    "winnow_fingerprint_docs",
-    # the round-14 newcomer: Unicode NFC audit (Arrow map pass)
-    "nfc_normalize_docs",
-    # the second round-14 newcomer: UT1-style domain blocklist
-    # (suffix explode + broadcast join + one keyed max-struct agg)
-    "domain_blocklist_filter",
-    # the third round-14 newcomer: C4 line-level cleaning (one bound
-    # struct over the line array, zero shuffles)
-    "c4_line_filter_docs",
-    # the fourth round-14 newcomer: robots.txt crawl permission
-    # (broadcast rules + keyed max-struct agg, the blocklist shape)
-    "robots_txt_filter",
-]
-HEADLINE = (
-    HEADLINE
-    + HEADLINE_R4
-    + HEADLINE_R5
-    + HEADLINE_R7
-    + HEADLINE_R9
-    + HEADLINE_R10
-    + HEADLINE_R11
-    + HEADLINE_R12
-    + HEADLINE_R13
-    + HEADLINE_R14
-)
+# Rounds that report a comparable total: `comparable_rN_total` sums the
+# queries added in round <= N, so it compares with round N's record.
+# The forced track started in round 12.
+COUNT_TAGS = (3, 6, 8, 9, 10, 11, 12, 13)
+FORCED_TAGS = (12, 13)
+
+# Arbitrary fixed reference for the Python calibration loop (about
+# the r13/r14 host's constant): `*_norm` totals from any two runs
+# compare with each other regardless of host load.
+NOMINAL_PY_CAL = 0.15
 
 
 def _calibrate_host(spark) -> dict[str, float]:
@@ -235,18 +149,81 @@ def _calibrate_host(spark) -> dict[str, float]:
     return {"jvm_range_sum_sec": round(jvm, 4), "py_loop_sec": round(py, 4)}
 
 
+def headline_totals(
+    timings: dict[str, float],
+    forced: dict[str, float],
+    cal_start: dict[str, float],
+    cal_end: dict[str, float],
+    sf: float,
+) -> dict:
+    """The output line from the two tracks' per-query minima and the
+    calibration bracket (pure: no Spark, no clock)."""
+
+    def upto(vals: dict[str, float], tag: int) -> float:
+        return sum(v for k, v in vals.items() if HEADLINE[k] <= tag)
+
+    comparables: dict[str, float] = {}
+    for tag in COUNT_TAGS:
+        comparables[f"comparable_r{tag}_total"] = round(upto(timings, tag), 4)
+        if tag in FORCED_TAGS:
+            comparables[f"comparable_forced_r{tag}_total"] = round(
+                upto(forced, tag), 4
+            )
+    total = sum(timings.values())
+    forced_total = sum(forced.values())
+
+    # Normalize by the PYTHON loop (the steadier cross-host anchor — the
+    # JVM loop is JIT-warmth-sensitive), averaged over the start/end
+    # bracket so a load spike at either end is split: a loaded host
+    # otherwise reads as an engine regression on untouched queries.
+    py_mean = (cal_start["py_loop_sec"] + cal_end["py_loop_sec"]) / 2
+    norm = NOMINAL_PY_CAL / py_mean if py_mean > 0 else 1.0
+
+    # Key ORDER matters: the driver records only the LAST ~2000 bytes
+    # of this line, so the diagnostic forced track goes FIRST (safe to
+    # truncate) and the comparable `queries` dict goes LAST with the
+    # summary totals; the headline total and the normalized keys sit
+    # after it, inside the recorded tail window. The FULL result is
+    # also written to BENCH_FULL.json so nothing is lost to the tail.
+    return {
+        "metric": "headline_queries_total_runtime",
+        "unit": "sec",
+        "queries_forced": forced,
+        "host_calibration": cal_end,
+        "host_calibration_start": cal_start,
+        **comparables,
+        "forced_total": round(forced_total, 4),
+        "sf": sf,
+        "queries": timings,
+        "value": round(total, 4),
+        "host_norm_factor": round(norm, 4),
+        f"comparable_r{COUNT_TAGS[-1]}_total_norm": round(
+            upto(timings, COUNT_TAGS[-1]) * norm, 4
+        ),
+        f"comparable_forced_r{FORCED_TAGS[-1]}_total_norm": round(
+            upto(forced, FORCED_TAGS[-1]) * norm, 4
+        ),
+        "value_norm": round(total * norm, 4),
+        "forced_total_norm": round(forced_total * norm, 4),
+    }
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([\d.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
-    spark = get_spark("tinyerp-etl-spark-bench")
     queries = all_queries()
+    # a name missing from the registry would silently shrink every total
+    missing = [name for name in HEADLINE if name not in queries]
+    if missing:
+        raise SystemExit(f"headline queries not in the registry: {missing}")
+    spark = get_spark("tinyerp-etl-spark-bench")
 
     # warm the JVM/page-cache once with the cheapest headline query so
     # per-query numbers measure the engine, not first-touch overheads;
     # also spin up the Arrow Python worker pool (several headline ops
     # use mapInPandas and would otherwise pay worker startup once)
-    queries[HEADLINE[0]](spark, sf_dir).count()
+    queries[next(iter(HEADLINE))](spark, sf_dir).count()
     spark.range(1000).mapInPandas(lambda it: it, schema="id long").count()
 
     # calibrate BEFORE the query passes as well as after: the JVM loop
@@ -263,8 +240,6 @@ def main() -> None:
     timings: dict[str, float] = {}
     for _pass in range(3):
         for name in HEADLINE:
-            if name not in queries:
-                continue
             t0 = time.perf_counter()
             # count() forces every JOIN and AGGREGATION in the plan —
             # the round-over-round comparable number since round 1.
@@ -292,8 +267,6 @@ def main() -> None:
     forced: dict[str, float] = {}
     for _pass in range(2):
         for name in HEADLINE:
-            if name not in queries:
-                continue
             t0 = time.perf_counter()
             queries[name](spark, sf_dir).write.format("noop").mode(
                 "overwrite"
@@ -301,113 +274,9 @@ def main() -> None:
             dt = time.perf_counter() - t0
             if name not in forced or dt < forced[name]:
                 forced[name] = round(dt, 4)
-    total = sum(timings.values())
 
-    # Round-over-round comparable totals, DERIVED in one place: the
-    # set benched in round N = everything minus every headline list
-    # added after round N, so `comparable_rN_total` sums timings over
-    # the cumulative-exclusion suffix. A new round is ONE entry in
-    # each dict plus its HEADLINE_R* in _ADDITIONS (review finding:
-    # eleven hand-maintained 'k not in HEADLINE_R*' chains meant
-    # every round touched ~11 sites, and one missed clause silently
-    # inflated an older comparable). Notes kept from the originals:
-    # r3 is the round-1..3 set; r6 the rounds-5-6 set; r8 the r8
-    # verdict's common-52; the forced track exists because expensive
-    # OUTPUT COLUMNS can't hide in the count() track (VERDICT r12
-    # Next #3); the r13 totals exclude HEADLINE_R14 because winnow
-    # joined AFTER its 181x rebind and would flatter any total
-    # compared against a round that lacked it.
-    _ADDITIONS = [
-        HEADLINE_R4, HEADLINE_R5, HEADLINE_R7, HEADLINE_R9,
-        HEADLINE_R10, HEADLINE_R11, HEADLINE_R12, HEADLINE_R13,
-        HEADLINE_R14,
-    ]
-    # tag -> index into _ADDITIONS of the FIRST excluded list
-    _COUNT_CUTS = {
-        "r3": 0, "r6": 2, "r8": 3, "r9": 4, "r10": 5, "r11": 6,
-        "r12": 7, "r13": 8,
-    }
-    _FORCED_CUTS = {"r12": 7, "r13": 8}
-
-    def _comparable(vals: dict, cut: int) -> float:
-        excluded = {k for lst in _ADDITIONS[cut:] for k in lst}
-        return sum(v for k, v in vals.items() if k not in excluded)
-
-    comparables = {
-        f"comparable_{tag}_total": round(_comparable(timings, cut), 4)
-        for tag, cut in _COUNT_CUTS.items()
-    }
-    forced_comparables = {
-        f"comparable_forced_{tag}_total": round(_comparable(forced, cut), 4)
-        for tag, cut in _FORCED_CUTS.items()
-    }
-
-    # Calibration-normalized comparable totals (optimization round 15,
-    # VERDICT r14 "Next round" #5): the r14 driver run started on a
-    # ~2.65x loaded host and its raw totals read as a 21% regression
-    # on untouched queries; the harness already emits the calibration
-    # bracket but nothing consumed it. Normalize by the PYTHON loop
-    # (the steadier cross-host anchor — the JVM loop is JIT-warmth-
-    # sensitive), averaged over the start/end bracket so a load spike
-    # at either end is split. NOMINAL_PY_CAL is an arbitrary fixed
-    # reference (~the r13/r14 builder-host constant): `*_norm` totals
-    # from any two runs are comparable to each other regardless of
-    # host load, which the raw totals are not. Additions-only — every
-    # pre-existing key keeps its exact raw semantics.
     cal_end = _calibrate_host(spark)
-    NOMINAL_PY_CAL = 0.15
-    py_mean = (cal_start["py_loop_sec"] + cal_end["py_loop_sec"]) / 2
-    norm = NOMINAL_PY_CAL / py_mean if py_mean > 0 else 1.0
-    normalized = {
-        "host_norm_factor": round(norm, 4),
-        "comparable_r13_total_norm": round(
-            _comparable(timings, _COUNT_CUTS["r13"]) * norm, 4
-        ),
-        "comparable_forced_r13_total_norm": round(
-            _comparable(forced, _FORCED_CUTS["r13"]) * norm, 4
-        ),
-        "value_norm": round(total * norm, 4),
-        "forced_total_norm": round(sum(forced.values()) * norm, 4),
-    }
-
-    # Key ORDER matters: the driver records only the LAST ~2000 bytes
-    # of this line (the r11 record already lost its front), so the
-    # diagnostic forced track goes FIRST (safe to truncate) and the
-    # round-over-round comparable `queries` dict goes LAST with the
-    # summary totals. The FULL result is also written to
-    # BENCH_FULL.json at the repo root (committed with the round) so
-    # nothing is lost to the tail budget.
-    out = {
-        "metric": "headline_queries_total_runtime",
-        "unit": "sec",
-        "queries_forced": forced,
-        "host_calibration": cal_end,
-        "host_calibration_start": cal_start,
-        **{
-            k: comparables[k]
-            for k in (
-                "comparable_r3_total", "comparable_r6_total",
-                "comparable_r8_total", "comparable_r9_total",
-                "comparable_r10_total", "comparable_r11_total",
-                "comparable_r12_total",
-            )
-        },
-        "comparable_forced_r12_total":
-            forced_comparables["comparable_forced_r12_total"],
-        "comparable_r13_total": comparables["comparable_r13_total"],
-        "comparable_forced_r13_total":
-            forced_comparables["comparable_forced_r13_total"],
-        "forced_total": round(sum(forced.values()), 4),
-        "sf": sf,
-        "queries": timings,
-        # the headline total sits AFTER the queries dict so it lands
-        # inside the recorded tail window
-        "value": round(total, 4),
-        # normalized keys LAST (review finding, r15): the driver
-        # records only the final ~2000 bytes of this line, and a
-        # loaded-host driver run is exactly when these keys matter
-        **normalized,
-    }
+    out = headline_totals(timings, forced, cal_start, cal_end, sf)
     try:
         with open(
             os.path.join(os.path.dirname(os.path.abspath(__file__)),

@@ -24,14 +24,13 @@ def main() -> None:
     names = sys.argv[2:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     out_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..")
-    spark = get_spark("plan-capture")
     qs = all_queries()
-    if not names:
-        names = sorted(qs)
+    unknown = [n for n in names if n not in qs]
+    if unknown:
+        raise SystemExit(f"unknown query names: {unknown}")
+    names = names or sorted(qs)
+    spark = get_spark("plan-capture")
     for name in names:
-        if name not in qs:
-            print(f"SKIP unknown {name}")
-            continue
         try:
             df = qs[name](spark, sf_dir)
             plan = df._jdf.queryExecution().explainString(

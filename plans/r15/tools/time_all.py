@@ -26,17 +26,17 @@ def main() -> None:
     passes = int(sys.argv[2]) if len(sys.argv) > 2 else 2
     names = sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark("time-all-profile")
     qs = all_queries()
-    if not names:
-        names = sorted(qs)
+    unknown = [n for n in names if n not in qs]
+    if unknown:
+        raise SystemExit(f"unknown query names: {unknown}")
+    names = names or sorted(qs)
+    spark = get_spark("time-all-profile")
     spark.range(1000).mapInPandas(lambda it: it, schema="id long").count()
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
     for _p in range(passes):
         for name in names:
-            if name not in qs:
-                continue
             spark.sparkContext.setJobDescription(f"noop:{name}")
             t0 = time.perf_counter()
             try:

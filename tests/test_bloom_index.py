@@ -168,6 +168,5 @@ def test_stream_fold_exhausted_retries_surface(spark, tmp_path, monkeypatch):
     stream = spark.readStream.schema("key string").parquet(src)
     with pytest.raises(Exception, match="always racing"):
         BI.run_stream_to_bloom_bitmap(
-            spark, stream, str(tmp_path / "bloom_x"), str(tmp_path / "ckpt2"),
-            occ_retries=1,
+            spark, stream, str(tmp_path / "bloom_x"), str(tmp_path / "ckpt2")
         )

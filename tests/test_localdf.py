@@ -74,6 +74,19 @@ def test_empty_rows(spark):
     assert df.schema == RICH and df.count() == 0
 
 
+def test_empty_rows_start_no_job(spark):
+    """An empty local_df is a local relation like a non-empty one:
+    collecting it starts no Spark job."""
+    sc = spark.sparkContext
+    df = local_df(spark, [], RICH)
+    sc.setJobGroup("empty-local-df", "collect of an empty local_df")
+    try:
+        assert df.collect() == []
+        assert list(sc.statusTracker().getJobIdsForGroup("empty-local-df")) == []
+    finally:
+        sc.setJobGroup(None, None)
+
+
 def test_write_has_no_python_eval(spark, tmp_path):
     """The point of the helper: the plan must be Arrow/LocalRelation
     JVM-side — no Python evaluation node, so a 1-row commit costs one

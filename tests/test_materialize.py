@@ -7,11 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from tinyerp_etl_spark.functions.materialize import (
-    DIR_CONF,
-    RELIABLE_CONF,
-    materialize,
-)
+from tinyerp_etl_spark.functions.materialize import RELIABLE_CONF, materialize
 
 
 def _frame(spark):
@@ -41,20 +37,14 @@ def test_reliable_without_dir_raises(spark):
     fast, not quietly fall back to executor-local blocks."""
     if spark.sparkContext.getCheckpointDir() is not None:
         pytest.skip("checkpoint dir already set session-wide")
-    with pytest.raises(ValueError, match="checkpoint directory"):
-        materialize(_frame(spark), reliable=True)
-
-
-def test_dir_conf_applies_checkpoint_dir(spark, tmp_path):
-    if spark.sparkContext.getCheckpointDir() is not None:
-        pytest.skip("checkpoint dir already set session-wide")
-    spark.conf.set(DIR_CONF, str(tmp_path / "confdir"))
+    spark.conf.set(RELIABLE_CONF, "true")
     try:
-        out = materialize(_frame(spark), reliable=True)
-        assert out.count() == 7
-        assert "confdir" in (spark.sparkContext.getCheckpointDir() or "")
+        with pytest.raises(ValueError, match="checkpoint directory") as err:
+            materialize(_frame(spark))
     finally:
-        spark.conf.unset(DIR_CONF)
+        spark.conf.unset(RELIABLE_CONF)
+    assert "spark.checkpoint.dir" in str(err.value)
+    assert "setCheckpointDir" in str(err.value)
 
 
 def test_reliable_and_local_paths_identical(spark, tmp_path):
@@ -96,84 +86,11 @@ def test_reliable_checkpoint_single_evaluation(spark, tmp_path):
 
     u = F.udf(bump, LongType())
     df = spark.range(0, 100, 1, 4).select(u(F.col("id")).alias("id"))
-    out = materialize(df, reliable=True)
+    spark.conf.set(RELIABLE_CONF, "true")
+    try:
+        out = materialize(df)
+    finally:
+        spark.conf.unset(RELIABLE_CONF)
     assert out.count() == 100
     assert acc.value == 100
 
-
-def test_explicit_override_beats_session_conf(spark, tmp_path):
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
-    spark.conf.set(RELIABLE_CONF, "true")
-    try:
-        # explicit False → localCheckpoint even with the switch on
-        out = materialize(_frame(spark), reliable=False)
-        assert out.count() == 7
-    finally:
-        spark.conf.unset(RELIABLE_CONF)
-
-
-def test_repointed_dir_conf_reapplied(spark, tmp_path):
-    """Changing spark.graft.materialize.dir AFTER materialize() has
-    applied it must repoint the checkpoint dir, not die silently
-    (first-use-wins was the round-6 behavior)."""
-    import tinyerp_etl_spark.functions.materialize as M
-
-    ctx = spark.sparkContext.applicationId
-    a, b = str(tmp_path / "dur_a"), str(tmp_path / "dur_b")
-    spark.sparkContext.setCheckpointDir(a)
-    # as if materialize() itself applied a
-    M._LAST_APPLIED[ctx] = (a, spark.sparkContext.getCheckpointDir())
-    spark.conf.set(DIR_CONF, b)
-    try:
-        out = materialize(_frame(spark), reliable=True)
-        assert out.count() == 7
-        assert "dur_b" in (spark.sparkContext.getCheckpointDir() or "")
-    finally:
-        spark.conf.unset(DIR_CONF)
-        M._LAST_APPLIED.pop(ctx, None)
-
-
-def test_dead_dir_conf_warns_once(spark, tmp_path):
-    """A DIR_CONF that loses to a manually-set checkpoint dir warns
-    (once per value) instead of being silently dead."""
-    import warnings
-
-    import tinyerp_etl_spark.functions.materialize as M
-
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "manual"))
-    M._LAST_APPLIED.pop(spark.sparkContext.applicationId, None)
-    M._WARNED_DEAD_CONF.clear()
-    spark.conf.set(DIR_CONF, str(tmp_path / "dead"))
-    try:
-        with pytest.warns(UserWarning, match="ignored"):
-            materialize(_frame(spark), reliable=True)
-        with warnings.catch_warnings():
-            warnings.simplefilter("error")
-            materialize(_frame(spark), reliable=True)
-    finally:
-        spark.conf.unset(DIR_CONF)
-
-
-def test_manual_override_survives_conf_repoint(spark, tmp_path):
-    """A manual setCheckpointDir made AFTER materialize() applied the
-    conf must win over a later conf repoint (warned, not stomped)."""
-    import tinyerp_etl_spark.functions.materialize as M
-
-    ctx = spark.sparkContext.applicationId
-    a = str(tmp_path / "conf_a")
-    spark.sparkContext.setCheckpointDir(a)
-    # as if materialize() applied a
-    M._LAST_APPLIED[ctx] = (a, spark.sparkContext.getCheckpointDir())
-    # the user now overrides directly...
-    manual = str(tmp_path / "manual_m")
-    spark.sparkContext.setCheckpointDir(manual)
-    # ...and the conf is later repointed to b
-    M._WARNED_DEAD_CONF.clear()
-    spark.conf.set(DIR_CONF, str(tmp_path / "conf_b"))
-    try:
-        with pytest.warns(UserWarning, match="ignored"):
-            materialize(_frame(spark), reliable=True)
-        assert "manual_m" in (spark.sparkContext.getCheckpointDir() or "")
-    finally:
-        spark.conf.unset(DIR_CONF)
-        M._LAST_APPLIED.pop(ctx, None)

@@ -36,6 +36,43 @@ def stream_dir(sf_dir, tmp_path):
     return str(d)
 
 
+def test_nanos_events_stream_matches_batch(spark, tmp_path):
+    """A TIMESTAMP(NANOS) events file reads the same through the batch
+    loader and the stream: one schema, one ns -> us truncation."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = tmp_path / "events.parquet"
+    d.mkdir()
+    ns = [1_700_000_000_123_456_789, 1_700_000_060_000_000_999]
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array([1, 2], pa.int64()),
+                "ts": pa.array(ns, pa.timestamp("ns")),
+                "user_id": pa.array([7, 8], pa.int64()),
+                "event_type": ["view", "click"],
+                "value": [1.5, 2.5],
+                "props": [None, "{}"],
+            }
+        ),
+        d / "part0.parquet",
+    )
+    batch = load_table(spark, str(tmp_path), "events")
+    assert batch.schema == TABLES["events"]
+    got: list = []
+    (
+        read_events_stream(spark, str(d))
+        .writeStream.foreachBatch(lambda df, _id: got.extend(df.collect()))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    assert sorted(got) == sorted(batch.collect())
+    assert [r["ts"].microsecond for r in sorted(got)] == [123456, 0]
+
+
 def test_stream_merge_sink_equals_batch(spark, sf_dir, stream_dir, tmp_path):
     stream = read_events_stream(spark, stream_dir)
     store = TableStore(spark, str(tmp_path / "tbl"), TABLES["events"])
@@ -324,136 +361,6 @@ def test_stateful_user_profiles(spark, sf_dir, stream_dir, tmp_path):
     }
     want = {
         r["user_id"]: (r["n_events"], r["sum_value_cents"], r["last_seen"])
-        for r in batch.collect()
-    }
-    assert got == want
-
-
-def _has_protobuf() -> bool:
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithStateInPandas needs protobuf (absent in this env)",
-)
-def test_tws_user_profiles_equals_batch(spark, sf_dir, stream_dir, tmp_path):
-    """transformWithStateInPandas profile stream == batch aggregation,
-    including the MapState-backed distinct-event-type count."""
-    from tinyerp_etl_spark.streaming.tws import TWS_PROFILE_SCHEMA, user_profiles_tws
-
-    stream = read_events_stream(spark, stream_dir)
-    profiles = user_profiles_tws(stream)
-    store = TableStore(spark, str(tmp_path / "tws_tbl"), TWS_PROFILE_SCHEMA)
-
-    def sink(batch_df, batch_id):
-        from tinyerp_etl_spark.etl.merge import merge_upsert
-
-        store.commit(merge_upsert(store.read(), batch_df, ["user_id"]))
-
-    (
-        profiles.writeStream.foreachBatch(sink)
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "tws_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-
-    batch = (
-        load_table(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.round(F.col("value") * 100).cast("long")).alias("sum_value_cents"),
-            F.max("ts").alias("last_seen"),
-            F.countDistinct("event_type").alias("n_event_types"),
-        )
-    )
-    got = {
-        r["user_id"]: (r["n_events"], r["sum_value_cents"], r["last_seen"], r["n_event_types"])
-        for r in store.read().collect()
-    }
-    want = {
-        r["user_id"]: (r["n_events"], r["sum_value_cents"], r["last_seen"], r["n_event_types"])
-        for r in batch.collect()
-    }
-    assert got == want
-
-
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithStateInPandas needs protobuf (absent in this env)",
-)
-def test_tws_profiles_resume_after_restart(spark, sf_dir, stream_dir, tmp_path):
-    """Kill/restart semantics for the transformWithState path: a second
-    availableNow run from the same checkpoint must resume the value/map
-    state (profiles keep accumulating, nothing double-counts) — the
-    tws twin of test_stream_dedup_resumes_after_restart."""
-    import os
-    import shutil
-
-    from tinyerp_etl_spark.streaming.tws import TWS_PROFILE_SCHEMA, user_profiles_tws
-
-    files = sorted(
-        f for f in os.listdir(stream_dir) if f.endswith(".parquet")
-    )
-    assert len(files) >= 2, "restart test needs >= 2 staged stream files"
-    src = str(tmp_path / "tws_restart_stream")
-    os.makedirs(src)
-    shutil.copy(os.path.join(stream_dir, files[0]), os.path.join(src, "a0.parquet"))
-
-    store = TableStore(spark, str(tmp_path / "tws_restart_tbl"), TWS_PROFILE_SCHEMA)
-    ckpt = str(tmp_path / "tws_restart_ckpt")
-
-    def sink(batch_df, batch_id):
-        from tinyerp_etl_spark.etl.merge import merge_upsert
-
-        store.commit(merge_upsert(store.read(), batch_df, ["user_id"]))
-
-    def drain():
-        (
-            user_profiles_tws(read_events_stream(spark, src))
-            .writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-
-    drain()  # run 1: first file, then the query stops
-    n1 = store.read().count()
-    assert n1 > 0
-
-    # "restart": a second file arrives; same checkpoint resumes state
-    shutil.copy(os.path.join(stream_dir, files[1]), os.path.join(src, "b0.parquet"))
-    drain()
-
-    # final profiles == batch aggregation over BOTH files' events:
-    # only true if run 2 resumed run 1's state instead of restarting
-    # from zero (undercount) or reprocessing file 1 (overcount)
-    batch = (
-        spark.read.parquet(src)
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.round(F.col("value") * 100).cast("long")).alias("sum_value_cents"),
-            F.max("ts").alias("last_seen"),
-            F.countDistinct("event_type").alias("n_event_types"),
-        )
-    )
-    got = {
-        r["user_id"]: (r["n_events"], r["sum_value_cents"], r["last_seen"], r["n_event_types"])
-        for r in store.read().collect()
-    }
-    want = {
-        r["user_id"]: (r["n_events"], r["sum_value_cents"], r["last_seen"], r["n_event_types"])
         for r in batch.collect()
     }
     assert got == want

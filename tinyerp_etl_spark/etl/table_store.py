@@ -26,6 +26,8 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructField, StructType, _parse_datatype_string
 
+from tinyerp_etl_spark.functions.localdf import local_df
+
 
 def write_atomic(path: str, text: str) -> None:
     """Replace the file at ``path`` with ``text``, all or nothing.
@@ -168,19 +170,11 @@ class TableStore:
         them), so any retained version stays readable — the input to
         merge.snapshot_diff CDC recovery and to reproducing what a
         query saw at an earlier run. Version 0 is the empty table in
-        the current schema, a local relation: an action on it starts
-        no Spark job (``createDataFrame([], schema)`` would scan an
-        empty RDD). Raises if the version was never committed.
+        the current schema, an empty ``local_df``: an action on it
+        starts no Spark job. Raises if the version was never committed.
         """
         if version == 0:
-            jss = self.spark._jsparkSession
-            return DataFrame(
-                jss.createDataFrame(
-                    self.spark._jvm.java.util.ArrayList(),
-                    jss.parseDataType(self.schema.json()),
-                ),
-                self.spark,
-            )
+            return local_df(self.spark, [], self.schema)
         d = self._version_dir(version)
         if not os.path.isdir(d):
             raise ValueError(f"version {version} does not exist at {self.path}")

@@ -43,7 +43,15 @@ def local_df(
         schema = StructType.fromDDL(schema)
     rows = list(rows)
     if not rows:
-        return spark.createDataFrame([], schema)
+        # createDataFrame([], schema) scans an empty RDD (a job per
+        # action); the JVM builds an empty local relation directly
+        jss = spark._jsparkSession
+        return DataFrame(
+            jss.createDataFrame(
+                spark._jvm.java.util.ArrayList(), jss.parseDataType(schema.json())
+            ),
+            spark,
+        )
     names = [f.name for f in schema.fields]
     first = rows[0]
     if hasattr(first, "__fields__"):  # pyspark Row: align by name

@@ -13,7 +13,7 @@ only in failure semantics, not results:
   real cluster, though, a lost executor takes its blocks with it AND
   the truncated lineage means Spark cannot recompute them: a
   multi-hour job dies at hour three.
-- ``checkpoint``: blocks are written to the checkpoint directory
+- ``checkpoint``: blocks are written to Spark's checkpoint directory
   (HDFS/S3 on a cluster), so any executor can re-read them after a
   loss. One write + N reads of distributed storage — slower per
   materialization, but the only strategy whose failure story survives
@@ -22,8 +22,8 @@ only in failure semantics, not results:
 ``materialize(df)`` routes between them per session:
 
     spark.conf.set("spark.graft.materialize.reliable", "true")
-    spark.sparkContext.setCheckpointDir("hdfs:///jobs/ckpt")  # or
-    spark.conf.set("spark.graft.materialize.dir", "hdfs:///jobs/ckpt")
+    spark.sparkContext.setCheckpointDir("hdfs:///jobs/ckpt")
+    # or start the session with spark.checkpoint.dir=hdfs:///jobs/ckpt
 
 Both strategies produce bit-identical frames (the tests pin this), so
 flipping the switch changes durability, never answers. The reference
@@ -37,88 +37,31 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 RELIABLE_CONF = "spark.graft.materialize.reliable"
-DIR_CONF = "spark.graft.materialize.dir"
-
-# Per-SparkContext record of the DIR_CONF value materialize() last
-# applied via setCheckpointDir and the getCheckpointDir() result that
-# apply produced (keyed by applicationId — checkpoint dirs are
-# context state, and a second context in the same process must not
-# make the first context's conf-applied dir look manually set). The
-# pair is needed because getCheckpointDir() returns the uuid
-# SUBDIRECTORY Spark creates under the configured path, so the
-# session conf can't be compared against it directly — and BOTH
-# directions must stay loud: a repointed DIR_CONF must not be
-# silently dead (first-use-wins), and a manual setCheckpointDir made
-# after materialize() applied the conf must not be silently stomped
-# by a later conf repoint (the current dir differing from the
-# recorded apply result is how the manual call is detected).
-_LAST_APPLIED: dict[str, tuple[str, str | None]] = {}
-_WARNED_DEAD_CONF: set[str] = set()
 
 
-def materialize(df: DataFrame, reliable: bool | None = None, eager: bool = True) -> DataFrame:
-    """Materialize ``df`` and truncate its lineage.
+def materialize(df: DataFrame) -> DataFrame:
+    """Materialize ``df`` eagerly and truncate its lineage.
 
-    ``reliable=None`` (the default at every call site) consults the
-    session conf ``spark.graft.materialize.reliable`` so one switch
-    moves a whole pipeline onto cluster-safe checkpointing without
-    touching operator code. Explicit True/False overrides per call.
-
-    The reliable path requires a checkpoint directory — either
-    ``sparkContext.setCheckpointDir`` or the session conf
-    ``spark.graft.materialize.dir`` (applied on first use). It raises
-    rather than silently falling back: a caller who asked for
-    executor-loss durability must not get executor-local blocks.
+    The session conf ``spark.graft.materialize.reliable`` moves every
+    call onto durable checkpointing without touching operator code.
+    That path writes into Spark's checkpoint directory and raises when
+    none is set, rather than silently falling back: a caller who asked
+    for executor-loss durability must not get executor-local blocks.
     """
     spark = df.sparkSession
-    if reliable is None:
-        reliable = (
-            spark.conf.get(RELIABLE_CONF, "false").strip().lower() == "true"
+    if spark.conf.get(RELIABLE_CONF, "false").strip().lower() != "true":
+        return df.localCheckpoint()
+    if spark.sparkContext.getCheckpointDir() is None:
+        raise ValueError(
+            "reliable materialization needs a checkpoint directory: set "
+            "spark.checkpoint.dir or call sparkContext.setCheckpointDir(...) "
+            "(a durable, executor-reachable path — HDFS/S3 on a cluster)"
         )
-    if not reliable:
-        return df.localCheckpoint(eager=eager)
-    sc = spark.sparkContext
-    ctx = sc.applicationId
-    target = spark.conf.get(DIR_CONF, None)
-    cur = sc.getCheckpointDir()
-    applied = _LAST_APPLIED.get(ctx)
-    if cur is None:
-        if not target:
-            raise ValueError(
-                "reliable materialization needs a checkpoint directory: "
-                "call sparkContext.setCheckpointDir(...) or set "
-                f"{DIR_CONF} (a durable, executor-reachable path — "
-                "HDFS/S3 on a cluster)"
-            )
-        sc.setCheckpointDir(target)
-        _LAST_APPLIED[ctx] = (target, sc.getCheckpointDir())
-    elif applied is None or cur != applied[1]:
-        # the current dir is NOT the one materialize() last applied:
-        # the user set it directly (before first use, or overriding a
-        # previously-applied conf). The manual call wins — but a
-        # DIR_CONF that is now dead should be loud (once per value),
-        # whatever order the two settings happened in.
-        if target and target not in _WARNED_DEAD_CONF:
-            import warnings
-
-            _WARNED_DEAD_CONF.add(target)
-            warnings.warn(
-                f"{DIR_CONF}={target!r} is set but the checkpoint "
-                f"directory was configured directly ({cur!r}); the "
-                "conf is ignored — unset one of the two",
-                stacklevel=2,
-            )
-    elif target and target != applied[0]:
-        # the conf was repointed AFTER materialize() applied it (and
-        # nobody set the dir manually in between) — honor the new
-        # value instead of first-use-wins-silently
-        sc.setCheckpointDir(target)
-        _LAST_APPLIED[ctx] = (target, sc.getCheckpointDir())
     # Classic RDD lore says persist-before-checkpoint or the write job
     # recomputes the plan; Spark 4's Dataset.checkpoint does NOT pay
     # that tax (accumulator-pinned by test_reliable_checkpoint_single_
     # evaluation — n evaluations, not 2n), so no defensive persist here.
-    return df.checkpoint(eager=eager)
+    return df.checkpoint()
 
 
 def sort_after_pin(df: DataFrame, *cols) -> DataFrame:

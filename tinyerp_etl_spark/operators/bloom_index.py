@@ -179,7 +179,6 @@ def run_stream_to_bloom_bitmap(
     key_col: str = "key",
     m_bits: int = BLOOM_M_BITS,
     k: int = BLOOM_K,
-    occ_retries: int = 3,
 ) -> None:
     """Fold a stream of reference keys into the persisted bitmap —
     decontamination-set maintenance at ingest.
@@ -204,8 +203,7 @@ def run_stream_to_bloom_bitmap(
         occ_fold(
             lambda: update_bloom_bitmap(
                 spark, path, batch_df, key_col=key_col, m_bits=m_bits, k=k
-            ),
-            occ_retries,
+            )
         )
 
     drain_available_now(keys_stream, fold, checkpoint_dir)

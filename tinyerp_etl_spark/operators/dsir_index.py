@@ -274,7 +274,6 @@ def run_stream_to_dsir_model(
     docs_stream: DataFrame,
     path: str,
     checkpoint_dir: str,
-    occ_retries: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
     n_buckets: int = DSIR_BUCKETS,
@@ -301,8 +300,7 @@ def run_stream_to_dsir_model(
                 id_col,
                 on_overlap="skip_existing",
                 n_buckets=n_buckets,
-            ),
-            occ_retries,
+            )
         )
 
     drain_available_now(docs_stream, sink, checkpoint_dir)

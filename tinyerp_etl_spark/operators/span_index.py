@@ -780,7 +780,6 @@ def run_stream_clean_and_fold(
     index_path: str,
     cleaned_path: str,
     checkpoint_dir: str,
-    occ_retries: int = 3,
 ) -> None:
     """The streaming face of the production ingest loop: drain a
     document stream through ``clean_and_fold_batch`` (availableNow),
@@ -794,8 +793,7 @@ def run_stream_clean_and_fold(
         occ_fold(
             lambda: clean_and_fold_batch(
                 spark, index_path, batch_df, cleaned_path
-            ),
-            occ_retries,
+            )
         )
 
     drain_available_now(docs_stream, sink, checkpoint_dir)
@@ -806,7 +804,6 @@ def run_stream_to_span_index(
     docs_stream: DataFrame,
     path: str,
     checkpoint_dir: str,
-    occ_retries: int = 3,
 ) -> None:
     """Maintain the span-gram index from a document stream
     (availableNow) — register-at-ingest: each micro-batch folds its
@@ -822,8 +819,7 @@ def run_stream_to_span_index(
         occ_fold(
             lambda: update_span_index(
                 spark, path, batch_df, on_overlap="skip_existing"
-            ),
-            occ_retries,
+            )
         )
 
     drain_available_now(docs_stream, sink, checkpoint_dir)

@@ -2047,3 +2047,44 @@ ETL_ORACLES["xml_roundtrip_orders"] = """
     GROUP BY o_orderstatus
     ORDER BY o_orderstatus
 """
+
+
+ETL_QUERIES = {
+    "asof_purchase_to_view": asof_purchase_to_view,
+    "range_join_event_bursts": range_join_event_bursts,
+    "kmv_distinct_users": kmv_distinct_users,
+    "scd2_user_event_history": scd2_user_event_history,
+    "snapshot_diff_orders": snapshot_diff_orders,
+    "replace_order_items": replace_order_items,
+    "sessionize_user_events": sessionize_user_events,
+    "incremental_rollup_orders": incremental_rollup_orders,
+    "watermark_resolution_matrix": watermark_resolution_matrix,
+    "hierarchy_subtree_rollup": hierarchy_subtree_rollup,
+    "skew_salted_event_totals": skew_salted_event_totals,
+    "cohort_retention_daily": cohort_retention_daily,
+    "longest_active_streaks": longest_active_streaks,
+    "fuzzy_match_customers": fuzzy_match_customers,
+    "copurchase_part_pairs": copurchase_part_pairs,
+    "copurchase_pagerank_3iter": copurchase_pagerank_3iter,
+    "copurchase_triangles": copurchase_triangles,
+    "attribution_interval_join": attribution_interval_join,
+    "time_travel_orders_versions": time_travel_orders_versions,
+    "funnel_view_click_purchase": funnel_view_click_purchase,
+    "file_format_roundtrip_orders": file_format_roundtrip_orders,
+    "csv_quarantine_split": csv_quarantine_split,
+    "nested_flatten_roundtrip": nested_flatten_roundtrip,
+    "incremental_pipeline_events": incremental_pipeline_events,
+    "json_props_rollup": json_props_rollup,
+    "variant_props_extract": variant_props_extract,
+    "hll_distinct_users": hll_distinct_users,
+    "merge_upsert_events": merge_upsert_events,
+    "keep_latest_event_per_user": keep_latest_event_per_user,
+    "set_null_missing_region": set_null_missing_region,
+    "hierarchy_closure_part": hierarchy_closure_part,
+    "key_skew_profile_events": key_skew_profile_events,
+    "xml_roundtrip_orders": xml_roundtrip_orders,
+    "kmv_sketch_rollup": kmv_sketch_rollup,
+    "hll_union_rollup": hll_union_rollup,
+    "zorder_clustered_scan": zorder_clustered_scan,
+    "bucketed_join_revenue": bucketed_join_revenue,
+}

@@ -1547,3 +1547,55 @@ def approx_quantile_order_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.coalesce(F.col("le"), F.lit(0)) >= F.col("target_rank") - tol)
         ).alias("within_bound"),
     ).orderBy("label")
+
+
+RELATIONAL_QUERIES = {
+    "q1_pricing_summary": q1_pricing_summary,
+    "agg_distinct_count": agg_distinct_count,
+    "agg_rollup": agg_rollup,
+    "agg_cube": agg_cube,
+    "audit_counts": audit_counts,
+    "data_profile_orders": data_profile_orders,
+    "q3_shipping_priority": q3_shipping_priority,
+    "q5_local_supplier_volume": q5_local_supplier_volume,
+    "join_left_enrich": join_left_enrich,
+    "join_semi_customers_with_orders": join_semi_customers_with_orders,
+    "join_anti_orphan_audit": join_anti_orphan_audit,
+    "join_full_outer_balance": join_full_outer_balance,
+    "window_latest_order_per_customer": window_latest_order_per_customer,
+    "window_running_total": window_running_total,
+    "window_rank_price_in_status": window_rank_price_in_status,
+    "topk_expensive_orders": topk_expensive_orders,
+    "setops_customer_nations": setops_customer_nations,
+    "scalar_functions_showcase": scalar_functions_showcase,
+    "exists_returned_orders": exists_returned_orders,
+    "subquery_small_quantity_revenue": subquery_small_quantity_revenue,
+    "scalar_subquery_rich_idle_customers": scalar_subquery_rich_idle_customers,
+    "conditional_agg_returnflag": conditional_agg_returnflag,
+    "promo_revenue_ratio": promo_revenue_ratio,
+    "monthly_revenue_trend": monthly_revenue_trend,
+    "q7_volume_shipping": q7_volume_shipping,
+    "q8_market_share": q8_market_share,
+    "q10_returned_items": q10_returned_items,
+    "q13_order_distribution": q13_order_distribution,
+    "q15_top_supplier": q15_top_supplier,
+    "q18_large_volume_customers": q18_large_volume_customers,
+    "q19_discount_revenue": q19_discount_revenue,
+    "groupwise_min_cheapest_parts": groupwise_min_cheapest_parts,
+    "sql_q6_forecast_revenue": sql_q6_forecast_revenue,
+    "quantiles_order_value_by_status": quantiles_order_value_by_status,
+    "window_moving_avg_daily_revenue": window_moving_avg_daily_revenue,
+    "window_navigation_showcase": window_navigation_showcase,
+    "datetime_functions_showcase": datetime_functions_showcase,
+    "pivot_status_by_priority": pivot_status_by_priority,
+    "unpivot_nation_balances": unpivot_nation_balances,
+    "setops_bag_semantics": setops_bag_semantics,
+    "deterministic_sample_orders": deterministic_sample_orders,
+    "stratified_sample_orders": stratified_sample_orders,
+    "gapfill_daily_revenue": gapfill_daily_revenue,
+    "anomaly_zscore_daily_revenue": anomaly_zscore_daily_revenue,
+    "array_functions_showcase": array_functions_showcase,
+    "null_handling_showcase": null_handling_showcase,
+    "coercion_showcase": coercion_showcase,
+    "approx_quantile_order_totals": approx_quantile_order_totals,
+}

@@ -173,15 +173,22 @@ def _events_ts_unit(path: str) -> str:
     return unit
 
 
+def read_events(reader, path: str) -> DataFrame:
+    """Events at ``path`` through ``reader`` (``spark.read`` or a
+    configured ``spark.readStream``), ts normalized to TimestampType
+    whatever the file's physical unit."""
+    if _events_ts_unit(path) != "ns":
+        return reader.schema(TABLES["events"]).parquet(path)
+    from pyspark.sql import functions as F
+
+    raw = reader.schema(_EVENTS_RAW_NANOS).parquet(path)
+    return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one test table with its pinned schema."""
-    if name == "events" and _events_ts_unit(f"{sf_dir}/events.parquet") == "ns":
-        from pyspark.sql import functions as F
-
-        raw = spark.read.schema(_EVENTS_RAW_NANOS).parquet(
-            f"{sf_dir}/events.parquet"
-        )
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if name == "events":
+        return read_events(spark.read, f"{sf_dir}/events.parquet")
     schema = TABLES[name]
     return spark.read.schema(schema).parquet(f"{sf_dir}/{name}.parquet")
 

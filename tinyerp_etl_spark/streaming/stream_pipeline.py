@@ -24,57 +24,25 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from tinyerp_etl_spark.etl.merge import merge_upsert
 from tinyerp_etl_spark.etl.table_store import TableStore
-
-# Streaming mirror of sources.catalog's events schema; ts read path is
-# picked per-directory by sniffing the parquet footer (see
-# sources.catalog._events_ts_unit) so a TIMESTAMP(NANOS) regeneration
-# and the current TIMESTAMP(MICROS) files both normalize identically.
-EVENTS_STREAM_SCHEMA = T.StructType(
-    [
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("props", T.StringType()),
-    ]
-)
-
-_EVENTS_STREAM_SCHEMA_NANOS = T.StructType(
-    [
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.LongType()),  # int64 nanos via nanosAsLong
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("props", T.StringType()),
-    ]
-)
+from tinyerp_etl_spark.sources.catalog import read_events
 
 
 def read_events_stream(
     spark: SparkSession, dir_path: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
-    """File-source stream of events (ts normalized to TimestampType).
+    """File-source stream of events (ts normalized to TimestampType,
+    with the batch read's schema and parquet-footer sniff).
 
     ``maxFilesPerTrigger`` is the reference's page cap (#27): bound
     how much one micro-batch ingests.
     """
-    from tinyerp_etl_spark.sources.catalog import _events_ts_unit
-
-    nanos = _events_ts_unit(dir_path) == "ns"
-    schema = _EVENTS_STREAM_SCHEMA_NANOS if nanos else EVENTS_STREAM_SCHEMA
-    reader = spark.readStream.schema(schema)
+    reader = spark.readStream
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    raw = reader.parquet(dir_path)
-    if nanos:
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return raw
+    return read_events(reader, dir_path)
 
 
 def tumbling_counts(events: DataFrame, window_len: str = "1 hour", lateness: str = "30 minutes") -> DataFrame:
@@ -108,7 +76,6 @@ def run_stream_to_merge_sink(
     keys: list[str],
     checkpoint_dir: str,
     transform: Callable[[DataFrame], DataFrame] | None = None,
-    occ_retries: int = 3,
 ) -> None:
     """Drain a stream into a TableStore via per-batch MERGE (availableNow).
 
@@ -121,7 +88,7 @@ def run_stream_to_merge_sink(
     (a backfill, a compaction job) advanced the table in between, the
     commit raises instead of silently overwriting that writer's rows —
     the sink then re-reads and re-merges (the MERGE is idempotent, so
-    the retry is safe), up to ``occ_retries`` times.
+    the retry is safe), within ``occ_fold``'s retry budget.
     """
     from tinyerp_etl_spark.etl.fold import drain_available_now, occ_fold
 
@@ -133,7 +100,7 @@ def run_stream_to_merge_sink(
             merged = merge_upsert(store.read_version(base), df, keys)
             store.commit(merged, expected_version=base)
 
-        occ_fold(fold, occ_retries)
+        occ_fold(fold)
 
     drain_available_now(stream_df, sink, checkpoint_dir)
 
@@ -143,7 +110,6 @@ def run_stream_to_bm25_index(
     docs_stream: DataFrame,
     index_path: str,
     checkpoint_dir: str,
-    occ_retries: int = 3,
 ) -> None:
     """Drain a document stream into the persisted BM25 postings index
     (availableNow) — continuous index-at-ingest: each micro-batch
@@ -177,8 +143,7 @@ def run_stream_to_bm25_index(
         occ_fold(
             lambda: update_bm25_index(
                 spark, index_path, batch_df, on_overlap="skip_existing"
-            ),
-            occ_retries,
+            )
         )
 
     drain_available_now(docs_stream, sink, checkpoint_dir)
@@ -189,7 +154,6 @@ def run_stream_to_minhash_index(
     docs_stream: DataFrame,
     index_path: str,
     checkpoint_dir: str,
-    occ_retries: int = 3,
 ) -> None:
     """Drain a document stream into the persisted MinHash feature
     index (availableNow) — near-dup-at-ingest: each micro-batch
@@ -214,8 +178,7 @@ def run_stream_to_minhash_index(
         occ_fold(
             lambda: update_minhash_index(
                 spark, index_path, batch_df, on_overlap="skip_existing"
-            ),
-            occ_retries,
+            )
         )
 
     drain_available_now(docs_stream, sink, checkpoint_dir)
